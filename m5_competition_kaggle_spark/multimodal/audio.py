@@ -99,7 +99,8 @@ def segment_audio(
     last one clips to the clip end. Pure integer column ops (sequence +
     explode) — the per-segment feature extraction would chain another
     ``mapInPandas`` after this fan-out, exactly like x42's frames."""
-    assert 0 < hop_ms <= seg_ms, "hop must be in (0, seg_ms]"
+    if not 0 < hop_ms <= seg_ms:
+        raise ValueError("hop must be in (0, seg_ms]")
     bounded = meta.filter(F.col("duration_ms") > 0)
     out = bounded.withColumn(
         "start_ms",

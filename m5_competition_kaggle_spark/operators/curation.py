@@ -45,7 +45,8 @@ def chunk_documents(
     chunk_hash = h64 of the space-joined chunk text — the id downstream
     chunk-level dedup or embedding jobs key on.
     """
-    assert 0 < stride <= chunk_size, "stride must be in (0, chunk_size]"
+    if not 0 < stride <= chunk_size:
+        raise ValueError("stride must be in (0, chunk_size]")
     out = df.select(
         F.col(key_col),
         (F.col(tokens_col) if tokens_col else tokens(text_col)).alias(

@@ -52,7 +52,8 @@ def interval_join(
     disjoint apart from the join bookkeeping (validated).
     """
     overlap = set(points.columns) & set(intervals.columns)
-    assert not overlap, f"overlapping columns: {sorted(overlap)}"
+    if overlap:
+        raise ValueError(f"overlapping columns: {sorted(overlap)}")
     g = F.lit(int(bucket_width))
     p = points.withColumn("__bucket", F.floor(F.col(point_ts) / g))
     # Degenerate intervals (end <= start) contain no point under the

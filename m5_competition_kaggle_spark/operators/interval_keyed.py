@@ -41,7 +41,10 @@ def interval_join_keyed(
     (names must be disjoint apart from ``on``; validated)."""
     keys = list(on)
     overlap = (set(points.columns) & set(intervals.columns)) - set(keys)
-    assert not overlap, f"overlapping non-key columns: {sorted(overlap)}"
+    if overlap:
+        raise ValueError(
+            f"overlapping non-key columns: {sorted(overlap)}"
+        )
     g = F.lit(int(bucket_width))
     p = points.withColumn("__bucket", F.floor(F.col(point_ts) / g))
     intervals = intervals.filter(F.col(end_col) > F.col(start_col))

@@ -88,7 +88,8 @@ def phash_near_pairs(
 
     Output: [partition_cols...,] id_a, id_b, hash_a, hash_b, hamming.
     """
-    assert max_hamming <= 2, "3 bands are exact only for Hamming <= 2"
+    if max_hamming > 2:
+        raise ValueError("3 bands are exact only for Hamming <= 2")
     parts = list(partition_cols)
     keyed = ahash(df, id_col, content_col)
     if parts:

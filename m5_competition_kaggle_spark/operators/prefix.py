@@ -62,7 +62,10 @@ def global_running_sums(
     its docstring and the checkpoint rationale below); identical
     per-column results (property-tested in tests/test_prefix_ops.py).
     """
-    assert len(value_cols) == len(out_cols) and value_cols
+    if not value_cols or len(value_cols) != len(out_cols):
+        raise ValueError(
+            "value_cols must be non-empty and match out_cols in length"
+        )
     n = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
     ranged = ranged.withColumn("__pid", F.spark_partition_id())
@@ -118,11 +121,10 @@ def global_running_sum(
 
     Contract: ``value_col`` must be integral (the driver-side offset
     relation is typed ``bigint``, and partial sums must not overflow
-    int64 — callers with wider ranges pre-scale or bucket first). The
-    sibling ``prefix_max.global_running_max`` is generic over ordered
-    types because max never widens; sum does, so this operator keeps
-    the explicit bigint contract rather than silently adopting the
-    input type's overflow behavior.
+    int64 — callers with wider ranges pre-scale or bucket first). Sum
+    widens where max would not, so this operator keeps the explicit
+    bigint contract rather than silently adopting the input type's
+    overflow behavior.
 
     .. note:: Calling this function launches a Spark job IMMEDIATELY
        (eager ``localCheckpoint`` of an intermediate relation) even if

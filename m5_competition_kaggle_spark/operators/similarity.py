@@ -26,7 +26,8 @@ def quantized_dot(a: str | Column, b: str | Column) -> Column:
     """Σ round(a_i·1000)·round(b_i·1000) as BIGINT — exact integer math."""
     a_name = a if isinstance(a, str) else None
     b_name = b if isinstance(b, str) else None
-    assert a_name and b_name, "pass column names (used inside SQL expr)"
+    if not (a_name and b_name):
+        raise ValueError("pass column names (used inside SQL expr)")
     return F.expr(
         f"aggregate(zip_with({a_name}, {b_name}, "
         f"(x, y) -> cast(round(x * {QUANT}) as bigint) * "

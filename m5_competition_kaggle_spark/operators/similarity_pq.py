@@ -74,7 +74,8 @@ def pq_topk(
     import pandas as pd
 
     sub = dim // m
-    assert sub * m == dim, "m must divide dim"
+    if sub * m != dim:
+        raise ValueError("m must divide dim")
 
     def subspaces(df, idc, vc):
         qz = df.select(F.col(idc).alias("__id"),

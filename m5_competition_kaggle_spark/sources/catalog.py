@@ -253,7 +253,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = normalize_events(spark.read.schema(raw).parquet(path))
     want = [(f.name, f.dataType) for f in SCHEMAS["events"].fields]
     got = [(f.name, f.dataType) for f in out.schema.fields]
-    assert got == want, out.schema
+    if got != want:
+        raise ValueError(f"events schema mismatch: {out.schema}")
     return out
 
 

@@ -121,10 +121,11 @@ def global_running_sum(
 
     Contract: ``value_col`` must be integral (the driver-side offset
     relation is typed ``bigint``, and partial sums must not overflow
-    int64 — callers with wider ranges pre-scale or bucket first). Sum
-    widens where max would not, so this operator keeps the explicit
-    bigint contract rather than silently adopting the input type's
-    overflow behavior.
+    int64 — callers with wider ranges pre-scale or bucket first). The
+    sibling ``prefix_max.global_running_max`` is generic over ordered
+    types because max never widens; sum does, so this operator keeps
+    the explicit bigint contract rather than silently adopting the
+    input type's overflow behavior.
 
     .. note:: Calling this function launches a Spark job IMMEDIATELY
        (eager ``localCheckpoint`` of an intermediate relation) even if

@@ -48,7 +48,7 @@ differential as ``scripts/check_oracle.py``.
   scale-path twin for x67's honestly quadratic pair join — incident
   windows snapped to 1-minute cells so the profile reduces over
   per-cell pre-aggregates; work linear in incidents,
-  density-independent after the map-side combine (the s30
+  density-independent after the map-side combine (the s30/x176
   decomposition pattern applied to the interval-join family).
 """
 
@@ -947,11 +947,11 @@ def x67b_interval_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     density both the window count and the events-per-window grow 100x,
     so pair-join WORK grows 10,000x (BASELINE.md measured 108.9x wall
     at 100x density). The fix is the same move s30 made for s24's
-    span-quadratic Theil-Sen: change the window contract from
-    event-anchored [t, t+30min) to CELL-ALIGNED — the 30 one-minute
-    cells starting at the error event's cell — so every window is a
-    union of whole cells and the profile reduces over per-cell
-    pre-aggregates:
+    span-quadratic Theil-Sen and x176's day-cell decomposition: change
+    the window contract from event-anchored [t, t+30min) to
+    CELL-ALIGNED — the 30 one-minute cells starting at the error
+    event's cell — so every window is a union of whole cells and the
+    profile reduces over per-cell pre-aggregates:
 
     - ``cells``: one hash-aggregate row per 1-minute cell
       (count / min / max of epoch-nanos) — map-side combine absorbs

@@ -120,6 +120,51 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    if only:
+        # explicitly-named staged (unregistered) queue entries resolve
+        # too; the default full run stays the driver's registered set
+        from m5_competition_kaggle_spark.queries import (
+            extensions_r12,
+            extensions_r13,
+            extensions_r14,
+            extensions_r15,
+            extensions_r16,
+            extensions_r17,
+            extensions_r18,
+            extensions_r19,
+            extensions_r20,
+        )
+
+        staged_mods = (
+            extensions_r12,
+            extensions_r13,
+            extensions_r14,
+            extensions_r15,
+            extensions_r16,
+            extensions_r17,
+            extensions_r18,
+            extensions_r19,
+            extensions_r20,
+        )
+        # staged queues must be name-disjoint — without this, a name in
+        # two modules would silently resolve to the later one (ADVICE
+        # r9). A hard raise, not assert: `python -O` strips asserts,
+        # which would silently re-enable the shadowing (ADVICE r10).
+        seen: set = set()
+        for m in staged_mods:
+            dup = seen & set(m.QUERIES)
+            if dup:
+                raise RuntimeError(
+                    f"staged query name collision: {sorted(dup)}"
+                )
+            seen |= set(m.QUERIES)
+        for k in only - set(qs):
+            for staged in staged_mods:
+                if k in staged.QUERIES:
+                    qs[k] = staged.QUERIES[k]
+                    if k in staged.ORACLES:
+                        oracles[k] = staged.ORACLES[k]
+                    break
     unknown = sorted(only - set(qs))
     if unknown:
         print(f"unknown query names: {', '.join(unknown)}", file=sys.stderr)

@@ -113,6 +113,27 @@ def main() -> int:
         raise SystemExit("usage: probe_10x.py <query> [query ...]")
     spark = get_spark("probe10x")
     qs = entry_mod.queries()
+    # staged-but-unregistered queue modules probe too (they need their
+    # BASELINE.md scale rows ready before their registration round)
+    from m5_competition_kaggle_spark.queries import (
+        extensions_r12 as _st12,
+        extensions_r13 as _st13,
+        extensions_r14 as _st14,
+        extensions_r15 as _st15,
+        extensions_r16 as _st16,
+        extensions_r17 as _st17,
+        extensions_r18 as _st18,
+        extensions_r19 as _st19,
+        extensions_r20 as _st20,
+    )
+    _staged_qs = {**_st12.QUERIES, **_st13.QUERIES,
+                  **_st14.QUERIES, **_st15.QUERIES,
+                  **_st16.QUERIES, **_st17.QUERIES,
+                  **_st18.QUERIES, **_st19.QUERIES,
+                  **_st20.QUERIES}
+
+    for k, v in _staged_qs.items():
+        qs.setdefault(k, v)
     build_x10(spark)
     for name in names:
         base = time_query(spark, qs[name], SF_DIR)

@@ -3,7 +3,7 @@
 growth shape; same orderkey-shift construction as probe_10x.py so
 referential joins hold, at 100 replicas: 60M lineitem rows).
 
-Usage: python scripts/probe_facts_100x.py x172_sales_gini x169_hierarchy_reconcile ...
+Usage: python scripts/probe_facts_100x.py x172_sales_gini x196_discount_lift ...
 Prints BASELINE.md-ready rows: | query | 1× s | 100× s | ratio |.
 """
 
@@ -84,6 +84,24 @@ def main() -> int:
         )
     spark = get_spark("probe_facts100x")
     qs = entry_mod.queries()
+    # staged-but-unregistered queue modules probe too
+    from m5_competition_kaggle_spark.queries import (
+        extensions_r13 as _st13,
+        extensions_r14 as _st14,
+        extensions_r15 as _st15,
+        extensions_r16 as _st16,
+        extensions_r17 as _st17,
+        extensions_r18 as _st18,
+        extensions_r19 as _st19,
+        extensions_r20 as _st20,
+    )
+
+    _staged_qs = {**_st13.QUERIES, **_st14.QUERIES,
+                  **_st15.QUERIES, **_st16.QUERIES,
+                  **_st17.QUERIES, **_st18.QUERIES,
+                  **_st19.QUERIES, **_st20.QUERIES}
+    for k, v in _staged_qs.items():
+        qs.setdefault(k, v)
     build_x100(spark)
     for name in names:
         base = time_query(spark, qs[name], SF_DIR)

@@ -87,6 +87,25 @@ def main() -> int:
         )
     spark = get_spark("probe_vecs100x")
     qs = entry_mod.queries()
+    # staged-but-unregistered queue modules probe too (the 10x
+    # probe's convention)
+    from m5_competition_kaggle_spark.queries import (
+        extensions_r13 as _st13,
+        extensions_r14 as _st14,
+        extensions_r15 as _st15,
+        extensions_r16 as _st16,
+        extensions_r17 as _st17,
+        extensions_r18 as _st18,
+        extensions_r19 as _st19,
+        extensions_r20 as _st20,
+    )
+
+    _staged_qs = {**_st13.QUERIES, **_st14.QUERIES,
+                  **_st15.QUERIES, **_st16.QUERIES,
+                  **_st17.QUERIES, **_st18.QUERIES,
+                  **_st19.QUERIES, **_st20.QUERIES}
+    for k, v in _staged_qs.items():
+        qs.setdefault(k, v)
     build_x100(spark)
     for name in names:
         base = time_query(spark, qs[name], SF_DIR)

@@ -1,20 +1,27 @@
-"""Adversarial-magnitude pins for the r12 DECIMAL(38,0) overflow fix
-in x169's hierarchy allocation. The 100× probes caught it raising
-ARITHMETIC_OVERFLOW when its int64 scalar product passed 2^63 at
-year-scale spans; these tests reconstruct that magnitude on a tiny
-synthetic corpus and check the exact values against Python bigint
-arithmetic — so an edit that silently reverts the widened
-intermediates fails HERE, not at the next 100× probe."""
+"""Adversarial-magnitude pins for the r12 DECIMAL(38,0) overflow
+fixes (x169 hierarchy allocation, x176 interarrival CV², x196
+discount-lift ppm via the shared _SIGNED_DIV macro). The 100× probes
+caught all three raising ARITHMETIC_OVERFLOW when their int64 scalar
+products passed 2^63 at year-scale spans / 60M-row facts; these tests
+reconstruct that magnitude on tiny synthetic corpora and check the
+exact values against Python bigint arithmetic — so an edit that
+silently reverts the widened intermediates fails HERE, not at the
+next 100× probe."""
 
+import math
 import os
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.queries import extensions_r13
+from m5_competition_kaggle_spark.queries import (
+    extensions_r13,
+    extensions_r15,
+)
 
 NS_PER_DAY = 86_400_000_000_000
+NANOS_PER_MIN = 60_000_000_000
 
 
 @pytest.fixture(scope="module")
@@ -26,6 +33,10 @@ def big_events_dir(spark):
       events/day), so over 60 days hist_leaf ~2.5·10¹⁴ and
       root_forecast·hist_leaf ~ 10²⁷ — far past 2^63 ≈ 9.2·10¹⁸
       (x169's old product), far inside DECIMAL(38,0).
+    - inter-arrival gaps of ~6 hours → g ≈ 360 minutes per gap with
+      ~240 gaps: small enough to keep moments int64, but the pin for
+      x176 is the VALUE, not the magnitude (its overflow pin below
+      drives n and Σg² up directly instead).
     """
     d = tempfile.mkdtemp(prefix="big_events_")
     rows = []
@@ -124,13 +135,172 @@ def test_x169_allocation_exact_past_int64(spark, big_events_dir):
         assert r["gap"] == want_alloc - _holt(per_type[et])
 
 
+@pytest.fixture(scope="module")
+def gap_events_dir(spark):
+    """Gaps engineered so 10⁶·n·Σg² > 2^63 (the x176 old form):
+    one event type, 3,000 events spaced 8,000 minutes apart →
+    n = 2,999 gaps, Σg² ≈ 1.9·10¹¹, 10⁶·n·Σg² ≈ 5.8·10²⁰."""
+    d = tempfile.mkdtemp(prefix="gap_events_")
+    rows = []
+    for i in range(3000):
+        ns = 10**15 + i * 8000 * NANOS_PER_MIN
+        rows.append((i + 1, ns, 7, "solo", 1.0, "{}"))
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, __ns long, user_id long, event_type string,"
+        " value double, props string",
+    ).select(
+        "event_id",
+        F.timestamp_micros(
+            (F.col("__ns") / 1000).cast("long")
+        ).alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(d, "events.parquet")
+    )
+    yield d
+    import shutil
+
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_x176_cv2_exact_past_int64(spark, gap_events_dir):
+    n = 2999
+    g = 8000
+    sum_g = n * g
+    sum_g2 = n * g * g
+    assert 10**6 * n * sum_g2 > 2**63, (
+        "fixture no longer reaches the old overflow magnitude"
+    )
+    var_num = n * sum_g2 - sum_g * sum_g  # = 0 for constant gaps
+    want_cv2 = (10**6 * var_num) // (sum_g * sum_g)
+    out = extensions_r15.x176_interarrival_cv2(
+        spark, gap_events_dir
+    ).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert r["n_gaps"] == n
+    assert r["sum_gap_min"] == sum_g
+    assert r["var_num"] == var_num == 0
+    assert r["cv2_ppm"] == want_cv2 == 0
+
+
+@pytest.fixture(scope="module")
+def fat_brand_dir(spark):
+    """lineitem/part corpus where one brand's n·Σxy products pass the
+    old int64 scaled form: 300k rows on one part, x = 100 permille,
+    y = 50 ⇒ 10⁶·(n·Σxy − ΣxΣy) magnitude needs a slope — use two
+    x levels so slope_num ≠ 0: half the rows at (x=0, y=10), half at
+    (x=100, y=50). n = 3·10⁵, Σxy = 1.5e5·5000 = 7.5e8,
+    n·Σxy = 2.25e14, ×10⁶ = 2.25e20 > 2^63."""
+    d = tempfile.mkdtemp(prefix="fat_brand_")
+    n_half = 150_000
+    li = spark.range(2 * n_half).selectExpr(
+        "CAST(1 AS BIGINT) AS l_partkey",
+        "CASE WHEN id < 150000 THEN CAST(0.0 AS DOUBLE)"
+        " ELSE CAST(0.1 AS DOUBLE) END AS l_discount",
+        "CASE WHEN id < 150000 THEN CAST(10.0 AS DOUBLE)"
+        " ELSE CAST(50.0 AS DOUBLE) END AS l_quantity",
+    )
+    li.coalesce(2).write.mode("overwrite").parquet(
+        os.path.join(d, "lineitem.parquet")
+    )
+    spark.createDataFrame(
+        [(1, "BrandX")], "p_partkey long, p_brand string"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(d, "part.parquet")
+    )
+    yield d
+    import shutil
+
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_x196_slope_exact_past_int64(spark, fat_brand_dir):
+    from m5_competition_kaggle_spark.queries import extensions_r20
+
+    n_half = 150_000
+    n = 2 * n_half
+    sx = n_half * 100
+    sy = n_half * 10 + n_half * 50
+    sxy = n_half * 100 * 50
+    sxx = n_half * 100 * 100
+    slope_num = n * sxy - sx * sy
+    slope_den = n * sxx - sx * sx
+    assert 10**6 * slope_num > 2**63, (
+        "fixture no longer reaches the old overflow magnitude"
+    )
+    want_ppm = (10**6 * slope_num) // slope_den
+    out = extensions_r20.x196_discount_lift(
+        spark, fat_brand_dir
+    ).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert r["n"] == n and r["sx"] == sx and r["sy"] == sy
+    assert r["slope_num"] == slope_num
+    assert r["slope_den"] == slope_den
+    assert r["slope_ppm"] == want_ppm == 400_000  # 0.4 qty per ‰
+
+
 # ------------------------------------------------- loud-guard pins
 # r13 (ADVICE r12): past the DECIMAL(38,0) envelope Spark's non-ANSI
 # decimal arithmetic/cast yields NULL silently while the DuckDB twins
-# raise — the guard turns the silent NULL into raise_error so both
-# engines fail loudly. This pin drives the guard's raise branch
+# raise — the guards turn the silent NULL into raise_error so both
+# engines fail loudly. These pins drive each guard's raise branch
 # directly at the breaching magnitude, and the no-raise branch one
 # order below it.
+
+
+def test_signed_div_raises_past_envelope(spark):
+    from m5_competition_kaggle_spark.queries.extensions_r20 import (
+        _SIGNED_DIV,
+    )
+
+    df = spark.createDataFrame(
+        [(9_223_372_036_854_775_807,)], "num long"
+    )
+    # quotient = 1e6 · int64max ≈ 9.2e24 > int64 → guard must raise
+    breach = _SIGNED_DIV.format(
+        num="num", den="1", scale="1000000", ctx="pin"
+    )
+    with pytest.raises(Exception, match="envelope"):
+        df.selectExpr(f"{breach} AS q").collect()
+    # negative branch breaches identically
+    with pytest.raises(Exception, match="envelope"):
+        df.selectExpr("-num AS num").selectExpr(
+            f"{breach} AS q"
+        ).collect()
+
+
+def test_signed_div_exact_inside_envelope(spark):
+    from m5_competition_kaggle_spark.queries.extensions_r20 import (
+        _SIGNED_DIV,
+    )
+
+    df = spark.createDataFrame(
+        [(7_000_000_000_000,), (-7_000_000_000_000,), (None,)],
+        "num long",
+    )
+    expr = _SIGNED_DIV.format(
+        num="num", den="3", scale="1000000", ctx="pin"
+    )
+    got = sorted(
+        (r["q"] for r in df.selectExpr(f"{expr} AS q").collect()),
+        key=lambda v: (v is None, v),
+    )
+    want = sorted(
+        (
+            7_000_000_000_000 * 1_000_000 // 3,
+            -(7_000_000_000_000 * 1_000_000 // 3),
+            None,
+        ),
+        key=lambda v: (v is None, v),
+    )
+    assert got == want
 
 
 def test_x169_guard_raises_past_quotient_envelope(spark):
@@ -161,3 +331,48 @@ def test_x169_guard_raises_past_quotient_envelope(spark):
         "root_forecast long, hist_leaf long, hist_total long",
     ).selectExpr(f"{_X169_ALLOC} AS alloc").collect()
     assert ok[0]["alloc"] == 9_000_000_000_000_000_000 * 5 // 9
+
+
+def test_x210_skew_guard_wired_and_exact(spark):
+    """ADVICE r13: skew_ppm's quotient is bounded by 10^6*n_keys, not
+    10^6 — the x210 expression must route through _SIGNED_DIV. Pins
+    (a) the guard context string in the optimized plan (an edit that
+    reverts to a bare DIV fails here) and (b) the exact value on a
+    skewed frame vs Python bigint arithmetic."""
+    import shutil
+
+    from m5_competition_kaggle_spark.queries import extensions_r20
+
+    d = tempfile.mkdtemp(prefix="x210_pin_")
+    try:
+        rows = []
+        # key 1 hot: 60 rows; keys 2..21 one row each -> n_keys=21,
+        # n_rows=80, max=60
+        for i in range(60):
+            rows.append((i, 1, "view"))
+        for k in range(2, 22):
+            rows.append((100 + k, k, "click"))
+        spark.createDataFrame(
+            rows, "event_id long, user_id long, event_type string"
+        ).selectExpr(
+            "event_id",
+            "timestamp_micros(1704067200000000 + event_id) AS ts",
+            "user_id",
+            "event_type",
+            "CAST(1.0 AS DOUBLE) AS value",
+            "'{}' AS props",
+        ).coalesce(1).write.parquet(os.path.join(d, "events.parquet"))
+
+        out = extensions_r20.x210_key_skew_certificate(spark, d)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "x210: scaled quotient past int64" in plan
+
+        got = {r["key_name"]: r for r in out.collect()}
+        u = got["user_id"]
+        assert (u["n_keys"], u["n_rows"], u["max_cnt"]) == (21, 80, 60)
+        assert u["skew_ppm"] == 1_000_000 * 60 * 21 // 80
+        assert u["hhi_ppm"] == (
+            1_000_000 * (60 * 60 + 20) // (80 * 80)
+        )
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

@@ -1,10 +1,15 @@
-"""Property test for x67b_interval_cells against a brute-force
-pure-Python reference — the randomized hardening layer under the
-one-dataset oracle differential: the cell-decomposed profile must
-equal the definitionally direct computation (enumerate the 30 cells,
-union their members) for ANY random event cloud — including
-incidents whose windows are mostly empty and overlapping incident
-windows sharing cells.
+"""Property tests for the r13-second-session staged kernels against
+brute-force pure-Python references — the randomized hardening layer
+under the one-dataset oracle differential:
+
+- x200's sweep-line must reproduce a literal event-by-event sweep
+  (sessionize, emit ±1 boundaries, walk them in the pinned
+  (tsn, delta, user, session) order) for ANY random event cloud —
+  peak/starts/ends per day and the cross-day close_level carry.
+- x67b's cell-decomposed profile must equal the definitionally
+  direct computation (enumerate the 30 cells, union their members)
+  for ANY random event cloud — including incidents whose windows
+  are mostly empty and overlapping incident windows sharing cells.
 
 Timestamps are generated micro-aligned (multiples of 1000 ns)
 because the parquet writer stores micros — the engines' ts_nanos
@@ -16,11 +21,17 @@ import os
 import random
 import shutil
 import tempfile
+from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.queries import extensions_r14
+from m5_competition_kaggle_spark.queries import (
+    extensions_r14,
+    extensions_r17,
+)
 
+GAP_NS = 30 * 60 * 1_000_000_000
+DAY_NS = 86_400_000_000_000
 CELL_NS = 60 * 1_000_000_000
 T0 = 1_704_067_200_000_000_000  # 2024-01-01 00:00 UTC
 
@@ -42,6 +53,88 @@ def _write_events(spark, rows, d):
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(d, "events.parquet")
     )
+
+
+def _brute_concurrency(rows):
+    """The definitional sweep for x200."""
+    per_user = defaultdict(list)
+    for _eid, ns, uid, _et in rows:
+        per_user[uid].append(ns)
+    sessions = []
+    for uid, ts in per_user.items():
+        ts.sort()
+        start = prev = ts[0]
+        sid = 1
+        for t in ts[1:]:
+            if t - prev > GAP_NS:
+                sessions.append((uid, sid, start, prev))
+                sid += 1
+                start = t
+            prev = t
+        sessions.append((uid, sid, start, prev))
+    bounds = []
+    for uid, sid, s, e in sessions:
+        bounds.append((s, 1, uid, sid))
+        bounds.append((e + 1, -1, uid, sid))
+    bounds.sort()  # (tsn, delta, uid, sid): -1 before +1 on ties
+    lev = 0
+    days = {}
+    for tsn, delta, _uid, _sid in bounds:
+        lev += delta
+        rec = days.setdefault(
+            tsn // DAY_NS, {"starts": 0, "ends": 0, "peak": None}
+        )
+        if delta == 1:
+            rec["starts"] += 1
+        else:
+            rec["ends"] += 1
+        rec["peak"] = (
+            lev if rec["peak"] is None else max(rec["peak"], lev)
+        )
+    out = {}
+    close = 0
+    for d in sorted(days):
+        rec = days[d]
+        close += rec["starts"] - rec["ends"]
+        out[d] = (rec["starts"], rec["ends"], rec["peak"], close)
+    return out
+
+
+def test_concurrency_matches_brute_sweep(spark):
+    rng = random.Random(200_200)
+    for trial in range(4):
+        n_users = rng.randrange(2, 8)
+        rows = []
+        eid = 0
+        for uid in range(1, n_users + 1):
+            for _ in range(rng.randrange(1, 25)):
+                # 3 days of span, micro-aligned, occasional exact
+                # collisions across users (shared popular instants)
+                ns = T0 + 1000 * rng.randrange(
+                    0, 3 * DAY_NS // 1000
+                )
+                if rng.random() < 0.2:
+                    ns = T0 + 1000 * rng.randrange(0, 50) * 60_000
+                rows.append((eid, ns, uid, "view"))
+                eid += 1
+        expected = _brute_concurrency(rows)
+        d = tempfile.mkdtemp(prefix="x200_prop_")
+        try:
+            _write_events(spark, rows, d)
+            got = {
+                r["day_idx"]: (
+                    r["n_starts"],
+                    r["n_ends"],
+                    r["peak_level"],
+                    r["close_level"],
+                )
+                for r in extensions_r17.x200_concurrency_profile(
+                    spark, d
+                ).collect()
+            }
+            assert got == expected, f"trial {trial}"
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def _brute_interval_cells(rows):

@@ -133,14 +133,22 @@ def test_accuracy_flags_true_on_perfect_model(spark):
     assert row["corpus_acc_ge_floor"]
 
 
-def test_twins_registered_with_oracles():
-    """Both twins are registered with oracles, and the rows-only
-    queries they carry hash evidence for stay rows-only."""
+def test_registered_and_certified_or_headed():
+    """Both twins are registered with oracles and carry falsifiable
+    evidence: a head slot THIS round, or a currently-valid banked
+    driver-green row (i.e. not in the regenerated stale-promotions
+    set). The original r13 form asserted a head slot outright, which
+    is a one-round fact — the head-50 rotation correctly evicted the
+    twins once their r13 green banked."""
     from m5_competition_kaggle_spark import queries
 
+    head = queries._effective_head()
     qs = queries.all_queries()
     oracles = queries.all_oracles()
     for name in ("x17b_sketch_bounds", "x28b_fit_bounds"):
         assert name in qs and name in oracles
+        assert (
+            name in head or name not in queries.STALE_PROMOTIONS
+        ), f"{name} neither headed nor validly banked"
     for name in ("x17_approx_sketches", "x28_model_quality"):
         assert name in qs and name not in oracles  # still rows-only

@@ -30,27 +30,11 @@ Cost: a few ms per call (block-manager metadata ops), paid inside the
 
 from __future__ import annotations
 
-import os
+import logging
 
 from pyspark.sql import SparkSession
 
-# Queries whose wrapped entry has fired since the last JVM GC nudge.
-_calls_since_gc = 0
-
-# Every N query entries, additionally nudge the JVM garbage collector so
-# the ContextCleaner can reap driver-side state the RDD sweep cannot
-# reach (broadcast variables, accumulators, shuffle registrations whose
-# Python/JVM references are already dropped). r14 measured a forced GC
-# restoring a polluted session to better-than-fresh. DEFAULT 0 (off):
-# r15 A/B'd GC_EVERY=64 twice on full 249-query benches — once with
-# stop-the-world System.gc() (total 287.6 s vs 285.9 s valve-only;
-# tail-half improved 146→139 s but sporadic queries ate 1.5–3 s
-# pauses) and once with -XX:+ExplicitGCInvokesConcurrent (294.0 s;
-# concurrent cycles stole CPU from a stretch of queries). Neither beat
-# the plain RDD sweep on totals, so the nudge ships off; the knob
-# stays for boxes where broadcast/shuffle residue dominates (the r14
-# driver box's 2.4× signature) — set SPARK_GRAFT_GC_EVERY=64 there.
-GC_EVERY = int(os.environ.get("SPARK_GRAFT_GC_EVERY", "0"))
+log = logging.getLogger(__name__)
 
 
 def release_persistent_blocks(spark: SparkSession) -> int:
@@ -59,25 +43,21 @@ def release_persistent_blocks(spark: SparkSession) -> int:
     Called at query entry: at that point the only persistent RDDs are
     finished queries' checkpoint/persist leftovers (the current query
     has not built anything yet). Returns the number of RDDs released.
+    An RDD whose ``unpersist`` fails is skipped and counted into one
+    warning; a failure to enumerate the RDDs raises.
     """
-    global _calls_since_gc
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        n = 0
-        for jrdd in list(jmap.values()):
-            try:
-                jrdd.unpersist(False)
-                n += 1
-            except Exception:
-                pass
-    except Exception:
-        return 0
-    if GC_EVERY:
-        _calls_since_gc += 1
-        if _calls_since_gc >= GC_EVERY:
-            _calls_since_gc = 0
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    n, failed, first = 0, 0, None
+    for jrdd in list(jmap.values()):
+        try:
+            jrdd.unpersist(False)
+            n += 1
+        except Exception as e:  # one bad RDD must not block the rest
+            failed += 1
+            first = first or e
+    if failed:
+        log.warning(
+            "release_persistent_blocks: %d of %d unpersist calls failed;"
+            " first error: %r", failed, n + failed, first, exc_info=first,
+        )
     return n

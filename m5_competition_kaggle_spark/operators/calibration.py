@@ -8,7 +8,7 @@ x33's source caps both consume scores; this operator is their
 pre-flight check).
 
 Exactness: scores arrive as integer permille (the engine's standard
-quantization, cf. operators/similarity.QUANT); bins are permille DIV
+quantization, cf. operators/vector_kernel.QUANT); bins are permille DIV
 bin_width; per-bin positives / counts / mean score are pure int64, and
 the observed-rate and mean-score renderings use the engines' shared
 truncating integer division. The calibration gap (observed rate minus

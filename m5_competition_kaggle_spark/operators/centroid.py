@@ -9,7 +9,7 @@ re-embedding a corpus — if the confusion matrix degrades, the new
 embedding space broke the label structure.
 
 Integer contract: vectors quantize to int64 milli-units
-(``operators/similarity.py::QUANT``), the per-label score is
+(``operators/vector_kernel.py::QUANT``), the per-label score is
 ``dot(v, centroid_sum) DIV n_label`` — one truncating division by the
 label count instead of a float mean, identical in both engines — and
 the argmax breaks ties toward the smaller label. Everything certifies

@@ -13,10 +13,9 @@ OUTPUT; this grades the index itself, before any query runs:
   their own centroid — how tight the list is, the integer analogue
   of k-means inertia per cluster.
 
-Assignment reproduces ``ivf_topk``'s deterministic rule verbatim
-(centroids = lowest-id vectors, argmax int64 dot, ties to the
-smaller centroid id), so the health table describes EXACTLY the
-index the certified queries probe.
+Assignment is ``ivf_topk``'s seed codebook and nearest-centroid dot
+rule (``operators/vector_kernel.py``), so the health table describes
+EXACTLY the index the certified queries probe.
 
 Scale design: the centroid table broadcasts; assignment is one
 map-side pass + per-vector argmax window keyed by vector (never
@@ -28,10 +27,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from m5_competition_kaggle_spark.operators.similarity import (
-    quantize_expr,
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    nearest_centroids,
+    quantized,
+    seed_codebook,
 )
 
 
@@ -44,27 +44,10 @@ def ivf_assignments(
     """(vid, cid, cdot): every vector's inverted-list assignment
     under ``ivf_topk``'s deterministic centroid rule, with the
     quantized dot to its own centroid."""
-    qz = vectors.select(
-        F.col(id_col).alias("vid"),
-        quantize_expr(vec_col).alias("v"),
-    )
-    cent = qz.filter(F.col("vid") < n_centroids).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(v, cv, (x, y) -> x * y), 0L, "
-        "(acc, w) -> acc + w)"
-    )
-    w = Window.partitionBy("vid").orderBy(
-        F.desc("cdot"), F.asc("cid")
-    )
-    return (
-        qz.crossJoin(F.broadcast(cent))
-        .withColumn("cdot", dot)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vid", "cid", "cdot")
-    )
+    qz = quantized(vectors, id_col, vec_col)
+    return nearest_centroids(
+        qz, seed_codebook(qz, n_centroids), "vid", "v", "dot", score="cdot"
+    ).select("vid", "cid", "cdot")
 
 
 def ivf_health(

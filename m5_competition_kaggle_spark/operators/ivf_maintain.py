@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.operators.kmeans import _assign
-from m5_competition_kaggle_spark.operators.similarity import (
-    quantize_expr,
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    nearest_centroids,
+    quantized,
 )
 
 
@@ -48,12 +48,9 @@ def list_growth(
     even when nothing assigns to it."""
 
     def _counts(df: DataFrame, out: str) -> DataFrame:
-        qz = df.select(
-            F.col(id_col).alias("vid"),
-            quantize_expr(vec_col).alias("v"),
-        )
+        qz = quantized(df, id_col, vec_col)
         return (
-            _assign(qz, cent)
+            nearest_centroids(qz, cent, "vid", "v", "l2")
             .groupBy("cid")
             .agg(F.count(F.lit(1)).cast("long").alias(out))
         )

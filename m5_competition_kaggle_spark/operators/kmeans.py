@@ -8,12 +8,12 @@ training loop, built hash-certifiable:
 - init: centroids = the k lowest-id vectors (the certified IVF seed
   rule, so round 0 of this operator IS the current codebook);
 - assign: nearest centroid by exact int64 squared L2 over the
-  QUANT-quantized vectors (quantized per ``similarity.QUANT``), ties
-  broken on centroid id — a broadcast of k rows against the corpus,
-  one keyed argmin window, exactly the ivf_topk assignment shape;
-- update: per-dimension integer-ROUNDED mean (the x39/x142 centroid
-  rule: (2·s + n) DIV (2·n) with the sign fold), via posexplode +
-  one keyed aggregate — shuffle volume k·d rows, corpus-independent;
+  quantized vectors (``operators/vector_kernel.py``) — a broadcast of
+  k rows against the corpus, one keyed argmin window, exactly the
+  ivf_topk assignment shape;
+- update: the per-dimension integer-ROUNDED mean shared with x142
+  (``vector_kernel.rounded_mean``), via posexplode + one keyed
+  aggregate — shuffle volume k·d rows, corpus-independent;
 - repeat for a FIXED number of rounds (the x41 PageRank / x65 k-core
   unrolled-iteration precedent): both engines walk the identical
   integer trajectory, so assignments, cluster sizes and inertia all
@@ -21,68 +21,20 @@ training loop, built hash-certifiable:
 
 Scale: each round is one broadcast join + one keyed reduce; rounds
 are a compile-time constant. Empty clusters KEEP their previous
-centroid (documented, matches the oracle). Overflow: per-dim diff² ·
-dim must hold int64 — |q| ≤ ~10⁶ at dim ≤ 10³ holds easily."""
+centroid (documented, matches the oracle)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from m5_competition_kaggle_spark.operators.similarity import (
-    quantize_expr,
+from m5_competition_kaggle_spark.operators.similarity import ivf_search
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    nearest_centroids,
+    quantized,
+    rounded_mean,
+    seed_codebook,
 )
-
-
-def _sq_dist(a: str, b: str) -> F.Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "0L, (acc, v) -> acc + v)"
-    )
-
-
-def _assign(qz: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: (vid, v, cid, dist2)."""
-    w = Window.partitionBy("vid").orderBy(
-        F.asc("__d2"), F.asc("cid")
-    )
-    return (
-        qz.crossJoin(F.broadcast(cent))
-        .withColumn("__d2", _sq_dist("v", "cv"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vid", "v", "cid", F.col("__d2").alias("dist2"))
-    )
-
-
-def _update(assigned: DataFrame, cent: DataFrame) -> DataFrame:
-    """Integer-rounded per-dimension means; empty clusters keep their
-    previous centroid."""
-    comps = assigned.select(
-        "cid", F.posexplode("v").alias("i", "q")
-    )
-    sums = comps.groupBy("cid", "i").agg(
-        F.sum("q").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    rounded = sums.select(
-        "cid",
-        "i",
-        F.expr(
-            "CASE WHEN s >= 0 THEN (2 * s + n) DIV (2 * n) "
-            "ELSE -((2 * (-s) + n) DIV (2 * n)) END"
-        ).alias("r"),
-    )
-    fresh = rounded.groupBy("cid").agg(
-        F.array_sort(
-            F.collect_list(F.struct("i", "r"))
-        ).alias("__pairs")
-    ).select(
-        "cid",
-        F.expr("transform(__pairs, p -> p.r)").alias("cv"),
-    )
-    kept = cent.join(fresh.select("cid"), "cid", "left_anti")
-    return fresh.unionByName(kept)
 
 
 def train_centroids(
@@ -97,14 +49,16 @@ def train_centroids(
     summarizes and ``ivf_topk_trained`` probes."""
     if k < 1 or rounds < 0:
         raise ValueError("need k >= 1 and rounds >= 0")
-    qz = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
-    )
-    cent = qz.filter(F.col("vid") < k).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv")
-    )
+    qz = quantized(vectors, id_col, vec_col)
+    cent = seed_codebook(qz, k)
     for _ in range(int(rounds)):
-        cent = _update(_assign(qz, cent), cent)
+        fresh = rounded_mean(
+            nearest_centroids(qz, cent, "vid", "v", "l2"), "cid", "v"
+        )
+        # empty clusters keep their previous centroid
+        cent = fresh.unionByName(
+            cent.join(fresh.select("cid"), "cid", "left_anti")
+        )
         # lineage doubles per round; rounds are few and the centroid
         # table is k rows, so a local materialization keeps the plan
         # flat without a cluster-wide barrier
@@ -123,47 +77,11 @@ def ivf_topk_trained(
 ) -> DataFrame:
     """IVF probe under an EXPLICIT (cid, cv) codebook — the trained
     twin of ``similarity.ivf_topk`` (which hard-wires the seed rule).
-    Assignment and probing use the k-means metric (exact int64
-    squared L2, ties on cid); candidate ranking uses the exact
-    quantized dot with (dot desc, id asc) ties, identical to the
-    certified seed-rule path, so recall under the trained codebook is
-    directly comparable to x116's."""
-    qz = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
-    )
-    assigned = _assign(qz, cent).select("vid", "v", "cid")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize_expr(vec_col).alias("qv"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.asc("__d2"), F.asc("cid")
-    )
-    probes = (
-        qv.crossJoin(F.broadcast(cent))
-        .withColumn("__d2", _sq_dist("qv", "cv"))
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", "cid")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(v, qv, (x, y) -> x * y), 0L, "
-        "(acc, v2) -> acc + v2)"
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.asc("neighbor_id")
-    )
-    return (
-        assigned.join(probes, "cid")
-        .filter(F.col("vid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            dot.alias("dot"),
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
+    Assignment and probing use the k-means metric (squared L2);
+    candidates rank by the same dot as the seed-rule path, so recall
+    under the trained codebook is directly comparable to x116's."""
+    return ivf_search(
+        vectors, queries, cent, "l2", k, nprobe, id_col, vec_col
     )
 
 
@@ -179,13 +97,13 @@ def kmeans_lloyd(
     inertia (Σ dist² to the final centroid, exact int64), and
     centroid_l1 (Σ|component|, a compact certifiable checksum of the
     trained centroid itself)."""
-    qz = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
-    )
     cent = train_centroids(
         vectors, k=k, rounds=rounds, id_col=id_col, vec_col=vec_col
     )
-    final = _assign(qz, cent)
+    final = nearest_centroids(
+        quantized(vectors, id_col, vec_col), cent, "vid", "v", "l2",
+        score="dist2",
+    )
     per_cluster = final.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum("dist2").alias("inertia"),

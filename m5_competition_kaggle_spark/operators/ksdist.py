@@ -7,7 +7,7 @@ feature-distribution monitor runs on continuous features (score drift,
 latency drift, price drift).
 
 Determinism contract: callers pass an already-quantized BIGINT value
-column (`round(value * SCALE)` — the `operators/similarity.QUANT`
+column (`round(value * SCALE)` — the `operators/vector_kernel.QUANT`
 precedent), so the ECDF support is integer and the statistic
 
     D = max_q | F_ref(q) - F_cmp(q) |

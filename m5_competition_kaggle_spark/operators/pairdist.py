@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.operators.similarity import (
-    quantize_expr,
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    int_sqdist,
+    quantized,
 )
 
 
@@ -36,22 +37,14 @@ def pair_distance_histogram(
     int64."""
     if modulus < 1 or bucket_width < 1:
         raise ValueError("need modulus >= 1 and bucket_width >= 1")
-    s = vectors.filter(
-        F.col(id_col) % F.lit(int(modulus)) == 0
-    ).select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
+    s = quantized(
+        vectors.filter(F.col(id_col) % F.lit(int(modulus)) == 0),
+        id_col, vec_col,
     )
-    b = s.select(
-        F.col("vid").alias("wid"), F.col("v").alias("w")
-    )
+    b = s.select(F.col("vid").alias("wid"), F.col("v").alias("w"))
     pairs = s.join(
         F.broadcast(b), F.col("vid") < F.col("wid"), "inner"
-    ).select(
-        F.expr(
-            "aggregate(zip_with(v, w, (x, y) -> (x - y) * (x - y)), "
-            "0L, (acc, z) -> acc + z)"
-        ).alias("d2")
-    )
+    ).select(int_sqdist("v", "w").alias("d2"))
     return (
         pairs.groupBy(
             F.expr(f"d2 DIV {int(bucket_width)}").alias("bucket")

@@ -10,23 +10,23 @@ subspace whose mean error dwarfs the others needs more codes (or a
 coordinate rotation) before its ADC estimates are trustworthy —
 the compression-side sibling of x137's IVF occupancy health audit.
 
-Same determinism contract as similarity_pq: 1e-3 quantized
-components (``similarity.QUANT``), exact int64 distances, (distance,
-cid) argmin ties, the k-lowest-id seed codebook. Scale: encode is one
+Same determinism contract as similarity_pq: the
+``operators/vector_kernel.py`` squared L2 and nearest-centroid rule
+over the k-lowest-id seed codebook. Scale: encode is one
 map-side pass against the broadcast codebook (m×k tiny rows); the
 audit is a keyed aggregation to m rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.operators.similarity import (
-    quantize_expr,
-)
-from m5_competition_kaggle_spark.operators.similarity_pq import (
-    _sub_l2,
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    nearest_centroids,
+    quantized,
+    seed_codebook,
+    subspaces,
 )
 
 
@@ -44,42 +44,14 @@ def pq_distortion(
     sub = dim // m
     if sub * m != dim:
         raise ValueError("m must divide dim")
-    qz = vectors.select(
-        F.col(id_col).alias("__id"), quantize_expr(vec_col).alias("__v")
+    qz = quantized(vectors, id_col, vec_col, ("__id", "__v"))
+    cents = subspaces(
+        seed_codebook(qz, n_codes, "__id", "__v"), "cid", "cv", m, sub
     )
-
-    def subspaces(df: DataFrame) -> DataFrame:
-        return df.select(
-            "__id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).cast("long").alias("s"),
-                            F.expr(
-                                f"slice(__v, {s * sub + 1}, {sub})"
-                            ).alias("sv"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("__e"),
-        ).select("__id", "__e.s", "__e.sv")
-
-    corp = subspaces(qz)
-    cents = (
-        subspaces(qz.filter(F.col("__id") < n_codes))
-        .select(F.col("__id").alias("cid"), "s",
-                F.col("sv").alias("cv"))
-    )
-    w_enc = Window.partitionBy("__id", "s").orderBy("__d", "cid")
-    best = (
-        corp.join(F.broadcast(cents), "s")
-        .withColumn("__d", _sub_l2("sv", "cv"))
-        .withColumn("__rn", F.row_number().over(w_enc))
-        .filter(F.col("__rn") == 1)
-        .select("s", "__d")
-    )
+    best = nearest_centroids(
+        subspaces(qz, "__id", "__v", m, sub), cents, ["__id", "s"], "__v",
+        "l2", score="__d", on="s",
+    ).select("s", "__d")
     return (
         best.groupBy("s")
         .agg(

@@ -9,9 +9,9 @@ near-dup neighborhood. At web scale the intra-cluster join touches
 cluster id — no all-pairs anywhere.
 
 Determinism (the repo's oracle policy): centroids are the k lowest-id
-vectors and assignment ranks by the same quantized int64 dot with
-(dot desc, cid asc) tie-break as ``ivf_topk`` — a production build
-swaps in trained k-means centroids, identical plan. The keep rule is
+vectors and assignment is ``ivf_topk``'s nearest-centroid dot rule
+(``operators/vector_kernel.py``) — a production build swaps in
+trained k-means centroids, identical plan. The keep rule is
 deterministic too: a vector is DROPPED iff some LOWER-ID member of its
 cluster has quantized dot ≥ threshold with it (the lowest such id is
 reported as the canonical the row deduplicates to), so any engine
@@ -25,17 +25,15 @@ recursing the assignment inside hot clusters, plan unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.operators.similarity import quantize_expr
-
-
-def _int_dot(a: str, b: str) -> Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, "
-        "(acc, v) -> acc + v)"
-    )
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    int_dot,
+    nearest_centroids,
+    quantized,
+    seed_codebook,
+)
 
 
 def auto_n_centroids(n_vectors: int) -> int:
@@ -64,20 +62,10 @@ def assign_clusters(
     (:func:`auto_n_centroids`)."""
     if n_centroids is None:
         n_centroids = auto_n_centroids(vectors.count())
-    qz = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
-    )
-    cent = qz.filter(F.col("vid") < n_centroids).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv")
-    )
-    w = Window.partitionBy("vid").orderBy(F.desc("__cdot"), F.asc("cid"))
-    return (
-        qz.crossJoin(F.broadcast(cent))
-        .withColumn("__cdot", _int_dot("v", "cv"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vid", "v", "cid")
-    )
+    qz = quantized(vectors, id_col, vec_col)
+    return nearest_centroids(
+        qz, seed_codebook(qz, n_centroids), "vid", "v", "dot"
+    ).select("vid", "v", "cid")
 
 
 def semantic_dedup(
@@ -134,7 +122,7 @@ def _canonical_keep(
     kills = (
         hi.join(lo, "cid")
         .filter(F.col("lo_id") < F.col("hi_id"))
-        .withColumn("__dot", _int_dot("lo_v", "hi_v"))
+        .withColumn("__dot", int_dot("lo_v", "hi_v"))
         .filter(F.col("__dot") >= threshold_dot)
         .groupBy("hi_id")  # hi_id is unique; cid rides along via assigned
         .agg(F.min("lo_id").alias("canonical_id"))
@@ -180,7 +168,6 @@ def semantic_dedup_lsh(
     from m5_competition_kaggle_spark.operators.similarity import (
         hyperplanes,
         lsh_bucket_col,
-        quantize_expr,
     )
     from m5_competition_kaggle_spark.operators.similarity_scaled import (
         auto_num_planes,
@@ -189,7 +176,7 @@ def semantic_dedup_lsh(
     if num_planes is None:
         num_planes = auto_num_planes(vectors.count(), target_occupancy)
     planes = hyperplanes(num_planes, dim)
-    assigned = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
-    ).withColumn("cid", lsh_bucket_col("v", planes))
+    assigned = quantized(vectors, id_col, vec_col).withColumn(
+        "cid", lsh_bucket_col("v", planes)
+    )
     return _canonical_keep(assigned, threshold_dot, id_col)

@@ -14,11 +14,10 @@ O(n·k) with the k-row centroid table broadcast — the standard
 large-scale variant (it is what Spark MLlib's evaluator computes, via
 a squared-distance expansion).
 
-Determinism: centroids are component-wise INTEGER-ROUNDED means of
-the quantized vectors (half-away-from-zero, matching both engines'
-round()), d is floor(sqrt(Σ(x−c)²)) — IEEE sqrt of an exact int64 is
-correctly rounded in both engines, and the squared sums stay far
-inside 2⁵³ (quantized coords ≤ ~10³, so d² ≤ dims·4·10⁶) — so s in
+Determinism: centroids are ``vector_kernel.rounded_mean`` of the
+quantized vectors, d is floor(sqrt(``int_sqdist``)) — IEEE sqrt of an
+exact int64 is correctly rounded in both engines, and the squared sums
+stay far inside 2⁵³ (quantized coords ≤ ~10³, so d² ≤ dims·4·10⁶) — so s in
 ppm (1 000 000·(b−a) DIV max(a,b), 0 when both distances are 0)
 hash-certifies.
 
@@ -34,55 +33,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    int_sqdist_sql,
+    quantize_expr,
+    rounded_mean,
+)
+
 
 def centroid_table(
-    df: DataFrame, cluster_col: str, vec_col: str, quant: int = 1000
+    df: DataFrame, cluster_col: str, vec_col: str
 ) -> DataFrame:
-    """Integer-rounded mean vector per cluster: explode the quantized
-    vectors, sum per (cluster, dim), round each component to the
-    nearest integer (half away from zero — both engines' round())."""
-    comp = (
-        df.select(
-            F.col(cluster_col).alias("__c"),
-            F.posexplode(
-                F.expr(
-                    f"transform({vec_col}, "
-                    f"x -> CAST(round(CAST(x AS DOUBLE) * {int(quant)})"
-                    " AS BIGINT))"
-                )
-            ).alias("__pos", "__q"),
-        )
-        .groupBy("__c", "__pos")
-        .agg(F.sum("__q").alias("__s"), F.count(F.lit(1)).alias("__n"))
+    """(cluster, centroid): the integer-rounded mean of the quantized
+    vectors per cluster."""
+    q = df.select(
+        F.col(cluster_col).alias("cluster"),
+        quantize_expr(vec_col).alias("__v"),
     )
-    # round(S/n) half away from zero on integers: sign(S)·((2|S|+n) DIV 2n)
-    rounded = comp.withColumn(
-        "__r",
-        F.expr(
-            "CASE WHEN __s >= 0 THEN (2 * __s + __n) DIV (2 * __n) "
-            "ELSE -((2 * -__s + __n) DIV (2 * __n)) END"
-        ),
-    )
-    return (
-        rounded.groupBy("__c")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__pos", "__r"))
-            ).alias("__pr")
-        )
-        .select(
-            F.col("__c").alias("cluster"),
-            F.expr("transform(__pr, p -> p.__r)").alias("centroid"),
-        )
+    return rounded_mean(q, "cluster", "__v").select(
+        "cluster", F.col("cv").alias("centroid")
     )
 
 
 def simplified_silhouette(
-    df: DataFrame,
-    id_col: str,
-    cluster_col: str,
-    vec_col: str,
-    quant: int = 1000,
+    df: DataFrame, id_col: str, cluster_col: str, vec_col: str
 ) -> DataFrame:
     """Per-cluster mean simplified silhouette of the ``cluster_col``
     partition over quantized ``vec_col`` embeddings.
@@ -90,7 +63,7 @@ def simplified_silhouette(
     Output per cluster: n_points, s_ppm_sum, mean_s_ppm (truncating
     quotient). Clusters with a single cluster overall are undefined
     (b does not exist) — requires ≥ 2 clusters."""
-    cents = centroid_table(df, cluster_col, vec_col, quant=quant)
+    cents = centroid_table(df, cluster_col, vec_col)
     k = F.broadcast(
         cents.groupBy().agg(
             F.collect_list(F.struct("cluster", "centroid")).alias("__ks")
@@ -99,18 +72,13 @@ def simplified_silhouette(
     pts = df.select(
         F.col(id_col).alias("__id"),
         F.col(cluster_col).alias("__c"),
-        F.expr(
-            f"transform({vec_col}, "
-            f"x -> CAST(round(CAST(x AS DOUBLE) * {int(quant)})"
-            " AS BIGINT))"
-        ).alias("__v"),
+        quantize_expr(vec_col).alias("__v"),
     ).crossJoin(k)
     # one JVM-side pass over the k centroids: squared distance to each,
     # keep own (a2) and the min over others (b2)
     d2 = (
         "transform(__ks, kc -> struct(kc.cluster AS cl, "
-        "aggregate(zip_with(__v, kc.centroid, (x, c) -> (x - c) * (x - c)), "
-        "CAST(0 AS BIGINT), (acc, y) -> acc + y) AS dd))"
+        f"{int_sqdist_sql('__v', 'kc.centroid')} AS dd))"
     )
     scored = (
         pts.withColumn("__d2", F.expr(d2))

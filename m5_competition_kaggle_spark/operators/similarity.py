@@ -16,32 +16,24 @@ semantics, pre-normalize vectors once at ingest.
 from __future__ import annotations
 
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-QUANT = 1000  # 1e-3 quantization for deterministic ranking
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    int_dot,
+    nearest_centroids,
+    quantize_expr,
+    quantize_sql,
+    quantized,
+    seed_codebook,
+    top_n,
+)
 
 
-def quantized_dot(a: str | Column, b: str | Column) -> Column:
-    """Σ round(a_i·1000)·round(b_i·1000) as BIGINT — exact integer math."""
-    a_name = a if isinstance(a, str) else None
-    b_name = b if isinstance(b, str) else None
-    if not (a_name and b_name):
-        raise ValueError("pass column names (used inside SQL expr)")
-    return F.expr(
-        f"aggregate(zip_with({a_name}, {b_name}, "
-        f"(x, y) -> cast(round(x * {QUANT}) as bigint) * "
-        f"cast(round(y * {QUANT}) as bigint)), 0L, (acc, v) -> acc + v)"
-    )
-
-
-def quantize_expr(vec_col: str) -> Column:
-    """array<float> → array<long>: round(x·1000) per component, JVM-side —
-    all float rounding stays in Spark so Python math is pure int64."""
-    return F.expr(
-        f"transform({vec_col}, x -> cast(round(cast(x as double) * {QUANT})"
-        " as bigint))"
-    )
+def quantized_dot(a: str, b: str) -> Column:
+    """Σ round(a_i·QUANT)·round(b_i·QUANT) over two raw array<float>
+    columns (names) — ``int_dot`` of their quantized forms."""
+    return int_dot(quantize_sql(a), quantize_sql(b))
 
 
 def brute_force_topk(
@@ -145,14 +137,9 @@ def brute_force_topk(
             block_topk, "query_id long, neighbor_id long, dot long"
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return top_n(
+        scored, "query_id", "dot", "neighbor_id", "dot", k, "rank"
+    ).select("query_id", "neighbor_id", "dot", "rank")
 
 
 def hyperplanes(num_planes: int, dim: int, table: int = 0) -> list[list[int]]:
@@ -174,11 +161,8 @@ def lsh_bucket_col(qvec_col: str, planes: list[list[int]]) -> Column:
     ``quantize_expr``) against each integer hyperplane."""
     bucket = F.lit(0)
     for p, w in enumerate(planes):
-        arr = ", ".join(f"{x}L" for x in w)
-        dot = F.expr(
-            f"aggregate(zip_with({qvec_col}, array({arr}), "
-            f"(x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-        )
+        dot = int_dot(qvec_col, "array({})".format(
+            ", ".join(f"{x}L" for x in w)))
         bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket
 
@@ -196,7 +180,7 @@ def _bucketize_arrow(
 
     All L·P plane dots per vector in ONE Arrow-batched int64 matmul
     (BLAS), plus the L-way fan-out done with numpy repeat/tile. The
-    expression-tree alternative (L·P ``aggregate(zip_with(...))`` columns
+    expression-tree alternative (L·P ``lsh_bucket_col`` dot columns
     with 64-element literal arrays, then unpivot) produces pathological
     codegen — measured 1.6× slower end-to-end at sf0.1 with 32 planes.
     Quantization stays JVM-side (``quantize_expr``), so Python sees only
@@ -211,9 +195,7 @@ def _bucketize_arrow(
     ).reshape(num_tables * num_planes, dim)
     bp = df.sparkSession.sparkContext.broadcast(planes)
 
-    staged = df.select(
-        F.col(id_col).alias(out_id), quantize_expr(vec_col).alias("__q")
-    )
+    staged = quantized(df, id_col, vec_col, (out_id, "__q"))
 
     def gen(batches):
         pl = bp.value
@@ -325,14 +307,9 @@ def lsh_topk(
         .join(nv, "neighbor_id")
         .withColumn("dot", quantized_dot("__q_vec", "__v_vec"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.asc("neighbor_id")
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return top_n(
+        matched, "query_id", "dot", "neighbor_id", "dot", k, "rank"
+    ).select("query_id", "neighbor_id", "dot", "rank")
 
 
 def ivf_topk(
@@ -350,65 +327,56 @@ def ivf_topk(
 
     Unlike hyperplane LSH (``lsh_topk``, recall-tested only), IVF with a
     deterministic centroid rule is fully oracle-able: centroids are the
-    ``n_centroids`` lowest-id vectors, assignment/probing rank by the same
-    int64 dot with (dot desc, id asc) tie-break, so any engine reproduces
-    the identical candidate lists and results. At 100 TB the shape holds:
+    ``n_centroids`` lowest-id vectors and assignment/probing use the
+    ``vector_kernel`` dot and tie-break, so any engine reproduces the
+    identical candidate lists and results. At 100 TB the shape holds:
     the centroid table stays tiny (broadcast), assignment is one map-side
     pass over the vectors, and the probe join fans each query out to
     nprobe/n_centroids of the corpus instead of all of it. (A production
     build would swap the seed rule for trained k-means centroids — the
     plan is identical.)
     """
-    def _int_dot(a: str, b: str) -> Column:
-        return F.expr(
-            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, "
-            "(acc, v) -> acc + v)"
-        )
+    cent = seed_codebook(quantized(vectors, id_col, vec_col), n_centroids)
+    return ivf_search(
+        vectors, queries, cent, "dot", k, nprobe, id_col, vec_col
+    )
 
-    qz = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
+
+def ivf_search(
+    vectors: DataFrame,
+    queries: DataFrame,
+    cent: DataFrame,
+    metric: str,
+    k: int,
+    nprobe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF top-k under the (cid, cv) codebook ``cent``: every vector
+    joins its nearest list and every query probes its ``nprobe``
+    nearest lists, both by ``metric`` (``vector_kernel``'s
+    ``nearest_centroids``); candidates rank by exact ``int_dot``.
+    Returns (query_id, neighbor_id, dot, rank)."""
+    qz = quantized(vectors, id_col, vec_col)
+    assigned = nearest_centroids(qz, cent, "vid", "v", metric).select(
+        "vid", "v", "cid"
     )
-    cent = qz.filter(F.col("vid") < n_centroids).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv")
-    )
-    w_assign = Window.partitionBy("vid").orderBy(
-        F.desc("__cdot"), F.asc("cid")
-    )
-    assigned = (
-        qz.crossJoin(F.broadcast(cent))
-        .withColumn("__cdot", _int_dot("v", "cv"))
-        .withColumn("__rn", F.row_number().over(w_assign))
-        .filter(F.col("__rn") == 1)
-        .select("vid", "v", "cid")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), quantize_expr(vec_col).alias("qv")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("__cdot"), F.asc("cid")
-    )
-    probes = (
-        qv.crossJoin(F.broadcast(cent))
-        .withColumn("__cdot", _int_dot("qv", "cv"))
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", "cid")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.asc("neighbor_id")
-    )
-    return (
+    qv = quantized(queries, id_col, vec_col, ("query_id", "qv"))
+    probes = nearest_centroids(
+        qv, cent, "query_id", "qv", metric, n=nprobe
+    ).select("query_id", "qv", "cid")
+    cand = (
         assigned.join(probes, "cid")
         .filter(F.col("vid") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vid").alias("neighbor_id"),
-            _int_dot("v", "qv").alias("dot"),
+            int_dot("v", "qv").alias("dot"),
         )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
     )
+    return top_n(
+        cand, "query_id", "dot", "neighbor_id", "dot", k, "rank"
+    ).select("query_id", "neighbor_id", "dot", "rank")
 
 
 def exact_near_dup_pairs(
@@ -440,17 +408,13 @@ def exact_near_dup_pairs(
             "embedding_near_dup_pairs (LSH-bucketed) at scale, or pass "
             "a higher max_rows for a deliberate audit."
         )
-    rows = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(vec_col).alias("v")
-    ).collect()
+    rows = quantized(vectors, id_col, vec_col).collect()
     ids = np.array([r["vid"] for r in rows], dtype=np.int64)
     mat = np.array([r["v"] for r in rows], dtype=np.int64)
     sc = vectors.sparkSession.sparkContext
     b_ids, b_mat = sc.broadcast(ids), sc.broadcast(mat)
 
-    cand = vectors.select(
-        F.col(id_col).alias("id_a"), quantize_expr(vec_col).alias("v")
-    )
+    cand = quantized(vectors, id_col, vec_col, ("id_a", "v"))
 
     def score(batches):
         all_ids, all_mat = b_ids.value, b_mat.value
@@ -501,14 +465,10 @@ def embedding_near_dup_pairs(
     b = keyed.select(
         F.col(id_col).alias("id_b"), F.col("__qv").alias("__vb"), "bucket"
     )
-    int_dot = F.expr(
-        "aggregate(zip_with(__va, __vb, (x, y) -> x * y), 0L, "
-        "(acc, v) -> acc + v)"
-    )
     return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("dot", int_dot)
+        .withColumn("dot", int_dot("__va", "__vb"))
         .filter(F.col("dot") >= threshold_dot)
         .select("id_a", "id_b", "dot")
     )

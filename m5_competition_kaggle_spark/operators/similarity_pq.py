@@ -22,29 +22,25 @@ Scale shape at 100 TB:
   anything wider than its own id;
 - top-k is one window per query.
 
-Determinism: components quantize to 1e-3 integers
-(``similarity.QUANT``), every distance is an exact int64 sum of
-squares, all argmin/rank tie-breaks are (value, id) — so codes,
-estimates and the final ranking reproduce bit-for-bit in ANSI SQL
-(x72). The codebook rule is the same seed convention as IVF: the k
-lowest-id vectors supply the centroids for every subspace (a
-production build swaps in trained k-means; the plan is identical).
+Determinism: every distance is ``operators/vector_kernel.py``'s exact
+int64 squared L2 with its (value, id) tie-break, so codes, estimates
+and the final ranking reproduce bit-for-bit in ANSI SQL (x72). The
+codebook rule is the same seed convention as IVF: the k lowest-id
+vectors supply the centroids for every subspace (a production build
+swaps in trained k-means; the plan is identical).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.operators.similarity import quantize_expr
-
-
-def _sub_l2(a: str, b: str) -> Column:
-    """Exact int64 squared L2 between two quantized subvectors."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "0L, (acc, v) -> acc + v)"
-    )
+from m5_competition_kaggle_spark.operators.vector_kernel import (
+    int_sqdist,
+    quantized,
+    seed_codebook,
+    subspaces,
+)
 
 
 def pq_topk(
@@ -77,49 +73,22 @@ def pq_topk(
     if sub * m != dim:
         raise ValueError("m must divide dim")
 
-    def subspaces(df, idc, vc):
-        qz = df.select(F.col(idc).alias("__id"),
-                       quantize_expr(vc).alias("__v"))
-        return qz.select(
-            "__id",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.expr(
-                            f"slice(__v, {s * sub + 1}, {sub})"
-                        ).alias("sv"),
-                    )
-                    for s in range(m)
-                ])
-            ).alias("__e"),
-        ).select("__id", "__e.s", "__e.sv")
-
-    cents = (
-        subspaces(vectors.filter(F.col(id_col) < n_codes),
-                  id_col, vec_col)
-        .select(F.col("__id").alias("cid"), "s",
-                F.col("sv").alias("cv"))
-    )
+    seed = seed_codebook(quantized(vectors, id_col, vec_col), n_codes)
+    cents = subspaces(seed, "cid", "cv", m, sub)
 
     # Corpus encode (r15, guide §4.2): the r14 form evaluated
-    # aggregate(zip_with(...)) — an INTERPRETED higher-order lambda —
-    # once per (vector, subspace, centroid) row, i.e. corpus·m·n_codes
+    # int_sqdist — an INTERPRETED higher-order lambda — once per
+    # (vector, subspace, centroid) row, i.e. corpus·m·n_codes
     # times (2M interpreted evals ≈ 2.1 s of x72's 3.7 s at sf0.1).
     # One Arrow batch now computes every subspace distance with exact
     # int64 numpy (x² − 2xy + y² via integer einsum — no floats, no
     # BLAS rounding) and takes the argmin per (vector, subspace).
     # np.argmin returns the FIRST minimum, i.e. the lowest cid —
     # identical to the old min(d·n_codes + cid) packed tie-break.
-    # Overflow envelope: |component| ≤ ~2·QUANT ⇒ d ≤ sub·(2·2000)²
-    # ≈ 6.4e7 — far inside int64; the codebook is n_codes·dim int64s
-    # (a few KB), broadcast once per task via sc.broadcast.
-    cb_rows = (
-        vectors.filter(F.col(id_col) < n_codes)
-        .select(F.col(id_col).alias("cid"),
-                quantize_expr(vec_col).alias("cv"))
-        .collect()
-    )
+    # The vector_kernel overflow envelope covers the x² − 2xy + y²
+    # terms; the codebook is n_codes·dim int64s (a few KB), broadcast
+    # once per task via sc.broadcast.
+    cb_rows = seed.collect()
     # Compact codebook over the PRESENT cids only, sorted ascending —
     # a missing id < n_codes contributes no centroid (exactly the old
     # join semantics), and ascending order keeps argmin's first-min
@@ -135,9 +104,7 @@ def pq_topk(
     sc = vectors.sparkSession.sparkContext
     bc, bc_ids = sc.broadcast(cbm), sc.broadcast(cids)
 
-    staged = vectors.select(
-        F.col(id_col).alias("vec_id"), quantize_expr(vec_col).alias("__v")
-    )
+    staged = quantized(vectors, id_col, vec_col, ("vec_id", "__v"))
 
     def encode(batches):
         cbm, cid_arr = bc.value, bc_ids.value  # (m, k, sub), (k,)
@@ -167,11 +134,13 @@ def pq_topk(
 
     codes = staged.mapInPandas(encode, "vec_id long, s long, code long")
 
+    qsub = subspaces(
+        quantized(queries, id_col, vec_col, ("query_id", "sv")),
+        "query_id", "sv", m, sub,
+    )
     adc = (
-        subspaces(queries, id_col, vec_col)
-        .select(F.col("__id").alias("query_id"), "s", "sv")
-        .join(F.broadcast(cents), "s")
-        .withColumn("__d", _sub_l2("sv", "cv"))
+        qsub.join(F.broadcast(cents), "s")
+        .withColumn("__d", int_sqdist("sv", "cv"))
         .select("query_id", "s", F.col("cid").alias("code"), "__d")
     )
 
@@ -219,22 +188,13 @@ def pq_topk_rerank(
         vectors, queries, k=shortlist, m=m, n_codes=n_codes,
         id_col=id_col, vec_col=vec_col, dim=dim,
     ).select("query_id", "vec_id")
-    vz = vectors.select(
-        F.col(id_col).alias("vec_id"), quantize_expr(vec_col).alias("v"))
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize_expr(vec_col).alias("qv"))
+    vz = quantized(vectors, id_col, vec_col, ("vec_id", "v"))
+    qv = quantized(queries, id_col, vec_col, ("query_id", "qv"))
     w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
     return (
         cand.join(vz, "vec_id")
         .join(F.broadcast(qv), "query_id")
-        .withColumn(
-            "dist",
-            F.expr(
-                "aggregate(zip_with(qv, v, (x, y) -> (x - y) * (x - y)),"
-                " 0L, (acc, v) -> acc + v)"
-            ),
-        )
+        .withColumn("dist", int_sqdist("qv", "v"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "dist", "rank")

@@ -444,21 +444,10 @@ def x39_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     class-prototype computation behind centroid-based ANN (x23) and
     embedding-space drift monitoring — one explode + one keyed hash agg
     (map-side combinable), no shuffle of raw vectors beyond it."""
-    from m5_competition_kaggle_spark.operators.similarity import quantize_expr
+    from m5_competition_kaggle_spark.operators.centroid import centroid_sums
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.select(
-            "label",
-            F.posexplode(quantize_expr("embedding")).alias("pos", "q"),
-        )
-        .groupBy("label", F.col("pos").cast("long").alias("pos"))
-        .agg(
-            F.sum("q").alias("sum_q"),
-            F.count(F.lit(1)).alias("n_vectors"),
-        )
-        .orderBy("label", "pos")
-    )
+    return centroid_sums(emb).orderBy("label", "pos")
 
 
 QUERIES = {

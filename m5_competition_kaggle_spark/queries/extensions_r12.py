@@ -522,7 +522,8 @@ def x166_bm25_rerank_eval(
     from m5_competition_kaggle_spark.operators.retrieval import (
         bm25_topk,
     )
-    from m5_competition_kaggle_spark.operators.similarity import (
+    from m5_competition_kaggle_spark.operators.vector_kernel import (
+        int_dot,
         quantize_expr,
     )
 
@@ -555,10 +556,7 @@ def x166_bm25_rerank_eval(
         .select(
             "term",
             "doc_id",
-            F.expr(
-                "aggregate(zip_with(av, v, (x, y) -> x * y), 0L, "
-                "(acc, z) -> acc + z)"
-            ).alias("dot"),
+            int_dot("av", "v").alias("dot"),
         )
     )
     from pyspark.sql.window import Window

@@ -710,20 +710,15 @@ _JL_SIGNS = _jl_signs()
 
 def _jl_proj_cols(q_col: str) -> list:
     """Eight projection expressions p_j = Σ_i sign(i→j)·q_i over a
-    quantized array column — literal-array zip_with dot products,
-    whole-stage-codegen JVM arithmetic (no UDF)."""
-    cols = []
-    for j, signs in enumerate(_JL_SIGNS):
-        arr = "array({})".format(
-            ", ".join(f"{s}L" for s in signs)
-        )
-        cols.append(
-            F.expr(
-                f"aggregate(zip_with({q_col}, {arr},"
-                " (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-            ).alias(f"p{j}")
-        )
-    return cols
+    quantized array column — literal-array ``int_dot`` products,
+    JVM-side arithmetic (no UDF)."""
+    from m5_competition_kaggle_spark.operators.vector_kernel import int_dot
+
+    return [
+        int_dot(q_col, "array({})".format(
+            ", ".join(f"{s}L" for s in signs))).alias(f"p{j}")
+        for j, signs in enumerate(_JL_SIGNS)
+    ]
 
 
 def x212_jl_distortion(
@@ -755,7 +750,8 @@ def x212_jl_distortion(
     Reference parity: engine extension (SURVEY §2 ANN/embedding
     family beside x198 truncation recall and x205 health).
     """
-    from m5_competition_kaggle_spark.operators.similarity import (
+    from m5_competition_kaggle_spark.operators.vector_kernel import (
+        int_dot,
         quantize_expr,
     )
 
@@ -764,10 +760,7 @@ def x212_jl_distortion(
     )
     proj = emb.select(
         "vec_id",
-        F.expr(
-            "aggregate(zip_with(__q, __q, (x, y) -> x * y),"
-            " 0L, (acc, v) -> acc + v)"
-        ).alias("ipself"),
+        int_dot("__q", "__q").alias("ipself"),
         "__q",
         *_jl_proj_cols("__q"),
     )
@@ -783,10 +776,7 @@ def x212_jl_distortion(
     pairs = proj.join(b, "vec_id").select(
         F.col("ipself").alias("ipa"),
         "ipb",
-        F.expr(
-            "aggregate(zip_with(__q, __qb, (x, y) -> x * y),"
-            " 0L, (acc, v) -> acc + v)"
-        ).alias("ipab"),
+        int_dot("__q", "__qb").alias("ipab"),
         sum(
             (
                 (F.col(f"p{j}") - F.col(f"b{j}"))

@@ -59,13 +59,11 @@ def get_spark(
         # stdout, and \r progress bars pollute the capture window
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # The between-queries release valve (blocks.py) nudges the JVM
-        # GC so the ContextCleaner drains broadcast/shuffle state a
-        # long session accumulates; make that explicit GC a CONCURRENT
-        # G1 cycle instead of a stop-the-world full GC so the nudge
-        # never pauses a timed query (r15; the r14 periodic-GC knob
-        # failed its A/B precisely because full-GC pauses landed
-        # inside queries).
+        # Spark's ContextCleaner issues a periodic System.gc()
+        # (spark.cleaner.periodicGC.interval); make every explicit GC a
+        # CONCURRENT G1 cycle instead of a stop-the-world full GC so it
+        # never pauses a timed query (the r14 periodic-GC A/B failed
+        # precisely because full-GC pauses landed inside queries).
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:+ExplicitGCInvokesConcurrent",

@@ -2,9 +2,11 @@
 query — the scale-shape evidence behind the per-query docstrings, in
 one diffable artifact.
 
-For each ``__spark_entry__.queries()`` entry the executed plan (built
-at sf0.001; queries that pre-compute bounded scalars run those tiny
-jobs) is scanned for the node types that matter at 100 TB:
+For each ``__spark_entry__.queries()`` entry the query is first run
+to completion at sf0.001 (collected), then the plan that actually ran
+— the adaptive plan's final form (``isFinalPlan=true``), read from the
+same ``QueryExecution`` — is scanned for the node types that matter at
+100 TB:
 
 - exchanges (hash/range) — the shuffle count;
 - SinglePartition exchanges — allowed ONLY to merge a 1-row global
@@ -166,6 +168,18 @@ def _single_partition_ok(lines: list[str], i: int) -> bool:
     return "partial_count" in ctx or "keys=[]" in ctx
 
 
+def final_plan(df) -> str:
+    """Run ``df`` and return the physical plan that executed. Under
+    AQE, ``executedPlan`` before execution is the initial plan without
+    codegen stages; after the collect its final form holds the stage
+    boundaries, join switches and codegen spans as they ran."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return plan.executedPlan().toString()
+    return plan.toString()
+
+
 def main() -> int:
     import __spark_entry__ as entry_mod
     from m5_competition_kaggle_spark.session import get_spark
@@ -198,10 +212,8 @@ def main() -> int:
     flags: list[str] = []
     for name, fn in qs.items():
         try:
-            plan = (
-                fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-            )
-        except Exception as e:  # a query that cannot even plan is a bug
+            plan = final_plan(fn(spark, SF))
+        except Exception as e:  # a query that cannot even run is a bug
             rows.append((name, {}, f"PLAN ERROR: {e}"))
             flags.append(f"{name}: plan error {e}")
             continue
@@ -250,8 +262,9 @@ def main() -> int:
     out = [
         "# PLAN AUDIT — structural scale metrics per registered query",
         "",
-        "Generated by `scripts/plan_audit.py` over the executed plans at"
-        " sf0.001. Columns: hash/range exchanges (shuffles),"
+        "Generated by `scripts/plan_audit.py` over the final (post-AQE)"
+        " plans of the queries as executed at sf0.001. Columns:"
+        " hash/range exchanges (shuffles),"
         " SinglePartition exchanges (benign only when merging a 1-row"
         " global aggregate), broadcast exchanges, broadcast-NL joins,"
         " CartesianProduct (never acceptable), Arrow-batched Python"

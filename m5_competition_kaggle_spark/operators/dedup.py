@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.functions.text import (
     h64,
     h64_py,
@@ -201,39 +202,20 @@ def minhash_lsh_pairs(
     The full composition; returns (id_a, id_b, n_common, n_a, n_b, jaccard)
     for verified pairs ≥ threshold.
 
-    .. note:: Calling this function launches a Spark job IMMEDIATELY
-       (eager ``localCheckpoint`` of an intermediate relation) even if
-       the returned DataFrame is never acted on — it is not a lazy
-       plan builder. Checkpointing also truncates lineage: if an
-       executor holding a checkpoint block is lost (e.g. under
-       dynamic allocation / decommissioning), the job FAILS and must
-       be resubmitted rather than recomputing the block from lineage.
-       Deterministic batch retries make this acceptable here; see the
-       inline comment at the checkpoint site for why eager beats both
-       ``persist`` (CacheManager entry leak on long-lived sessions)
-       and lazy checkpoint (accumulator-cleanup race noise).
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
     # The shingle explode feeds both the signatures and the verify joins —
     # materialize it once instead of re-tokenizing the corpus three times.
-    # localCheckpoint, not persist (r12, same rework as prefix.py r11):
-    # an unpersisted CacheManager entry accumulates per call on a
-    # long-lived session; checkpoint blocks are ContextCleaner-managed
-    # and dropped when the DataFrame becomes unreachable. Lineage is
-    # truncated — a lost block fails the job instead of recomputing,
-    # acceptable for a deterministic batch operator whose jobs retry.
-    # eager=True default, matching prefix.py: the non-eager variant
-    # materializes via a supplementary job at first action, whose task
-    # completions race the cleanup of the parent query's SQL-metric
-    # accumulators (measured: hundreds of benign-but-noisy "non-existent
-    # accumulator" DAGScheduler errors per run). The eager job runs
-    # while those accumulators are still live, so the logs stay clean.
     # ``eager_checkpoint=False`` (r15, the x29 action-collapse): callers
     # composing this into a pipeline whose next blocking action consumes
     # the pairs anyway can let the shingle blocks materialize inside
     # that action — one job fewer, identical blocks and results.
-    sh = doc_shingles(
-        df, key_col, text_col, shingle_size, tokens_col=tokens_col
-    ).localCheckpoint(eager=eager_checkpoint)
+    sh = materialize(
+        doc_shingles(
+            df, key_col, text_col, shingle_size, tokens_col=tokens_col
+        ),
+        eager=eager_checkpoint,
+    )
     aggs = [
         F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MINHASH_P).alias(f"mh_{i}")
         for i, (a, b) in enumerate(minhash_params(num_hashes))
@@ -261,24 +243,10 @@ def ngram_jaccard_pairs(
     scored exactly. Complete (no LSH misses) but quadratic within shingle
     buckets — the small-corpus / high-precision path.
 
-    .. note:: Calling this function launches a Spark job IMMEDIATELY
-       (eager ``localCheckpoint`` of an intermediate relation) even if
-       the returned DataFrame is never acted on — it is not a lazy
-       plan builder. Checkpointing also truncates lineage: if an
-       executor holding a checkpoint block is lost (e.g. under
-       dynamic allocation / decommissioning), the job FAILS and must
-       be resubmitted rather than recomputing the block from lineage.
-       Deterministic batch retries make this acceptable here; see the
-       inline comment at the checkpoint site for why eager beats both
-       ``persist`` (CacheManager entry leak on long-lived sessions)
-       and lazy checkpoint (accumulator-cleanup race noise).
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
-    # One materialized shingle explode feeds both join sides and the
-    # sizes — localCheckpoint, not persist (leak rationale: see
-    # minhash_lsh_pairs above).
-    sh = doc_shingles(df, key_col, text_col, shingle_size).localCheckpoint(
-        eager=True
-    )
+    # One materialized shingle explode feeds both join sides and the sizes.
+    sh = materialize(doc_shingles(df, key_col, text_col, shingle_size))
     e1 = sh.select(F.col(key_col).alias("id_a"), "shingle")
     e2 = sh.select(F.col(key_col).alias("id_b"), "shingle")
     # Count common shingles directly off the join — materializing the
@@ -326,22 +294,11 @@ def containment_pairs(
     candidate generator for corpora with hot shingles), keyed aggregates
     for sizes and intersections.
 
-    .. note:: Calling this function launches a Spark job IMMEDIATELY
-       (eager ``localCheckpoint`` of an intermediate relation) even if
-       the returned DataFrame is never acted on — it is not a lazy
-       plan builder. Checkpointing also truncates lineage: if an
-       executor holding a checkpoint block is lost (e.g. under
-       dynamic allocation / decommissioning), the job FAILS and must
-       be resubmitted rather than recomputing the block from lineage.
-       Deterministic batch retries make this acceptable here; see the
-       inline comment at the checkpoint site for why eager beats both
-       ``persist`` (CacheManager entry leak on long-lived sessions)
-       and lazy checkpoint (accumulator-cleanup race noise).
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
-    # localCheckpoint, not persist (leak rationale: see minhash_lsh_pairs).
-    sh = doc_shingles(
+    sh = materialize(doc_shingles(
         df, key_col, text_col, shingle_size, tokens_col=tokens_col
-    ).localCheckpoint(eager=True)
+    ))
     e1 = sh.select(F.col(key_col).alias("id_a"), "shingle")
     e2 = sh.select(F.col(key_col).alias("id_b"), "shingle")
     common = (

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.functions.text import h64
 from m5_competition_kaggle_spark.operators.dedup import (
     MINHASH_P,
@@ -68,40 +69,25 @@ def incremental_near_dups(
     NULL; ``match_type`` ∈ ('corpus', 'batch', 'none') names the side
     that smallest match came from.
 
-    .. note:: Calling this function launches a Spark job IMMEDIATELY
-       (eager ``localCheckpoint`` of an intermediate relation) even if
-       the returned DataFrame is never acted on — it is not a lazy
-       plan builder. Checkpointing also truncates lineage: if an
-       executor holding a checkpoint block is lost (e.g. under
-       dynamic allocation / decommissioning), the job FAILS and must
-       be resubmitted rather than recomputing the block from lineage.
-       Deterministic batch retries make this acceptable here; see the
-       inline comment at the checkpoint site for why eager beats both
-       ``persist`` (CacheManager entry leak on long-lived sessions)
-       and lazy checkpoint (accumulator-cleanup race noise).
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
-    # localCheckpoint, not persist (r12 leak rework — rationale in
-    # dedup.minhash_lsh_pairs).
-    sh_new = doc_shingles(
-        new_df, key_col, text_col, shingle_size
-    ).localCheckpoint(eager=True)
+    sh_new = materialize(doc_shingles(new_df, key_col, text_col, shingle_size))
     # The corpus shingle table feeds BOTH its signature/band pipeline
     # and the exact-verify union — without the checkpoint the corpus
-    # is shingled twice (r14; guide §5 caching-when-reused). Same
-    # executor-local caveat as sh_new above. (Production incremental
-    # ingest precomputes corpus signatures — this materialization is
-    # the single-job stand-in for that store.)
-    sh_corp = doc_shingles(
-        corpus_df, key_col, text_col, shingle_size
-    ).localCheckpoint(eager=True)
+    # is shingled twice (r14; guide §5 caching-when-reused). (Production
+    # incremental ingest precomputes corpus signatures — this
+    # materialization is the single-job stand-in for that store.)
+    sh_corp = materialize(
+        doc_shingles(corpus_df, key_col, text_col, shingle_size)
+    )
     # b_new (new-batch band buckets, |new|·bands rows — bounded) is
     # consumed three times (the cross join side and both within-batch
     # sides); checkpointing it runs the signature aggregate + band
     # unpivot once (r14).
-    b_new = minhash_band_buckets(
+    b_new = materialize(minhash_band_buckets(
         _signatures(sh_new, key_col, num_hashes), key_col, num_hashes,
         bands,
-    ).localCheckpoint(eager=True)
+    ))
     b_corp = minhash_band_buckets(
         _signatures(sh_corp, key_col, num_hashes), key_col, num_hashes,
         bands,

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def _grams(col: str, q: int) -> "F.Column":
     """array of character q-grams of ``col`` (empty below length q)."""
@@ -61,18 +63,17 @@ def fuzzy_self_join(
     # "shuffle keys, not payloads") was tried and REJECTED: the two
     # extra keyed joins cost more than the 24-char payload saves
     # (measured 3.36 s vs 1.96 s at 32c) — revisit only for long
-    # strings. Same executor-local checkpoint caveat as
-    # minhash_lsh_pairs' shingle table.
-    grams = keyed.select(
+    # strings.
+    grams = materialize(keyed.select(
         "__id", "__s", F.explode(_grams("__s", q)).alias("__g")
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     rare = (
         grams.groupBy("__g")
         .agg(F.count(F.lit(1)).alias("__df"))
         .filter(F.col("__df") <= max_df)
         .select("__g")
     )
-    pruned = grams.join(rare, "__g").localCheckpoint(eager=True)
+    pruned = materialize(grams.join(rare, "__g"))
     a = pruned.select(
         F.col("__g"), F.col("__id").alias("id_a"), F.col("__s").alias("__sa")
     )

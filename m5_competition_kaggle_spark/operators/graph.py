@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def connected_components(
     edges: DataFrame,
@@ -62,7 +64,8 @@ def connected_components(
     # toy scale, so the round join never needed the exchange); at
     # cluster scale, where labels outgrow broadcast and the round
     # join is sort-merge, this removes the edge-list exchange from
-    # every round.
+    # every round. A persist, not ``materialize``: a checkpoint drops the
+    # hashpartitioning(b), so the round join would re-exchange on b.
     n_part = edges.sparkSession.sparkContext.defaultParallelism
     sym = fwd.unionByName(
         fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -73,11 +76,11 @@ def connected_components(
     # the convergence sum both materializes the round's checkpoint and
     # reports the fingerprint — halving the job-scheduling barriers per
     # round vs eager-checkpoint-then-aggregate (r3 verdict item 6).
-    labels = (
+    labels = materialize(
         sym.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("comp"))
-        .select(F.col("a").alias("node"), "comp")
-        .localCheckpoint(eager=False)
+        .select(F.col("a").alias("node"), "comp"),
+        eager=False,
     )
 
     def _round(prev: DataFrame) -> DataFrame:
@@ -91,7 +94,7 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("nbr_comp").alias("min_nbr"))
         )
-        return (
+        return materialize(
             prev.join(
                 nbr_min.select(F.col("a").alias("node"), "min_nbr"),
                 "node",
@@ -102,8 +105,8 @@ def connected_components(
                 F.least(
                     F.col("comp"), F.coalesce("min_nbr", "comp")
                 ).alias("comp"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
 
     # Fused init+round-1 convergence action (r15, VERDICT item 5): the
@@ -164,17 +167,15 @@ def connected_components_two_phase(
     maps every node to its component. ``stats["rounds"]`` reports the
     round count when a dict is passed (used by the diameter tests).
     """
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    all_nodes = (
+    all_nodes = materialize(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     prev_fp = None
     rounds = 0
@@ -200,13 +201,12 @@ def connected_components_two_phase(
         )
         dmins = directed.groupBy("u").agg(F.min("v").alias("m"))
         to_min = directed.join(dmins, "u")
-        e = (
+        e = materialize(
             to_min.filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(to_min.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
         fp = e.agg(
             F.count(F.lit(1)).alias("n"),
@@ -291,13 +291,12 @@ def pagerank_int(
     sym = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    edges_deg = sym.withColumn(
+    edges_deg = materialize(sym.withColumn(
         "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).localCheckpoint()
-    nodes = (
+    ))
+    nodes = materialize(
         edges_deg.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint()
     )
     base = (scale * (damping_den - damping_num)) // damping_den
     ranks = nodes.withColumn("r", F.lit(scale).cast("long"))
@@ -318,7 +317,7 @@ def pagerank_int(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(contribs, "node", "left")
             .select(
                 "node",
@@ -330,7 +329,6 @@ def pagerank_int(
                     )
                 ).alias("r"),
             )
-            .localCheckpoint()
         )
     return ranks.select("node", F.col("r").alias("rank"))
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.graph_metrics import (
     triangle_counts,
 )
@@ -43,7 +44,7 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     # an expensive pipeline (x113 feeds the full MinHash-LSH pair
     # generator), the lineage would re-run per branch. Truncate once
     # (lazy localCheckpoint, the x58/x130 lesson).
-    edges = edges.localCheckpoint(eager=False)
+    edges = materialize(edges, eager=False)
     deg = (
         edges.select(F.col("id_a").alias("node"))
         .unionAll(edges.select(F.col("id_b").alias("node")))

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def label_propagation(
     pairs: DataFrame,
@@ -38,7 +40,7 @@ def label_propagation(
     """(node, label) for every node that holds a label after ``rounds``
     synchronous propagation rounds. ``seeds`` carries (id_col,
     label_col); seed labels are clamped."""
-    edges = (
+    edges = materialize(
         pairs.select(
             F.col(a_col).alias("src"), F.col(b_col).alias("dst")
         )
@@ -48,11 +50,10 @@ def label_propagation(
             )
         )
         .distinct()
-        .localCheckpoint()
     )
-    seed = seeds.select(
+    seed = materialize(seeds.select(
         F.col(id_col).alias("node"), F.col(label_col).alias("label")
-    ).localCheckpoint()
+    ))
     labels = seed
     for _ in range(int(rounds)):
         votes = (
@@ -74,10 +75,9 @@ def label_propagation(
             .select("node", "label")
         )
         # seeds are clamped: their row wins over any adopted label
-        labels = (
+        labels = materialize(
             seed.unionByName(
                 adopted.join(seed.select("node"), "node", "left_anti")
             )
-            .localCheckpoint()
         )
     return labels

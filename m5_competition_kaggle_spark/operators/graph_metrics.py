@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def triangle_counts(
     pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
@@ -43,14 +45,13 @@ def triangle_counts(
     # verify joins) inlined 4×, Catalyst re-analysis dominated wall
     # clock (measured 33 s planning-bound on a 28-edge graph; ~3 s
     # after the cut). Same pattern as graph.py's CC loop.
-    e = (
+    e = materialize(
         pairs.select(
             F.least(F.col(a_col), F.col(b_col)).alias("u"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("v"),
         )
         .filter(F.col("u") < F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     deg = (
         e.select(F.col("u").alias("n"))
@@ -90,10 +91,9 @@ def triangle_counts(
     # Materialize the (small: one row per triangle-bearing node) result
     # eagerly so `oriented` can be unpersisted HERE — otherwise every
     # call in a long-lived session pins an edge-sized cache entry until
-    # the session dies. The localCheckpoint RDDs behind `e`/`per_node`
-    # are released by the ContextCleaner once the returned DataFrame is
-    # garbage-collected (same caching contract as graph.py's CC loop).
-    per_node = per_node.localCheckpoint(eager=True)
+    # the session dies. The fills behind `e`/`per_node` are released
+    # at the next query entry (see ``blocks.materialize``).
+    per_node = materialize(per_node)
     oriented.unpersist()
     return per_node
 
@@ -126,14 +126,13 @@ def kcore_peel(
     length). Per-round cost either way: one keyed degree aggregate and
     two semi-joins — no all-pairs, no driver-side data.
     """
-    e = (
+    e = materialize(
         pairs.select(
             F.least(F.col(a_col), F.col(b_col)).alias("u"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("v"),
         )
         .filter(F.col("u") < F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     n_edges = e.count() if rounds is None else None
     done = 0
@@ -147,11 +146,10 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("n")
-        e = (
+        e = materialize(
             e.join(keep.withColumnRenamed("n", "u"), "u", "leftsemi")
             .join(keep.withColumnRenamed("n", "v"), "v", "leftsemi")
             .select("u", "v")
-            .localCheckpoint()
         )
         done += 1
         if rounds is None:

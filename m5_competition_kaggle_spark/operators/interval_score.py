@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def scaled_interval_score(
     spark: SparkSession,
@@ -69,7 +71,7 @@ def scaled_interval_score(
     for a in alphas_permille:
         if not 2 <= int(a) <= 998:
             raise ValueError("alphas are permille in [2, 998]")
-    series = series.localCheckpoint(eager=False)
+    series = materialize(series, eager=False)
     # Global split period: bounded 1-row aggregate collected to the
     # driver — embeds as a literal, so the main plan carries no
     # broadcast exchange or nested-loop join for it.

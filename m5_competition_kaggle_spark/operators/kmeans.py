@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.similarity import ivf_search
 from m5_competition_kaggle_spark.operators.vector_kernel import (
     nearest_centroids,
@@ -62,7 +63,7 @@ def train_centroids(
         # lineage doubles per round; rounds are few and the centroid
         # table is k rows, so a local materialization keeps the plan
         # flat without a cluster-wide barrier
-        cent = cent.localCheckpoint(eager=False)
+        cent = materialize(cent, eager=False)
     return cent
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def partition_modularity(
     edges: DataFrame,
@@ -57,7 +59,7 @@ def partition_modularity(
     # when edges is an expensive pipeline (x108's MinHash-LSH pairs)
     # each branch would re-run it — truncate once (the x58/x113
     # lesson; lazy localCheckpoint).
-    tagged = tagged.localCheckpoint(eager=False)
+    tagged = materialize(tagged, eager=False)
 
     m_row = tagged.agg(F.count(F.lit(1)).alias("m"))
 

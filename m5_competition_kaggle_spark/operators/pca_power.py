@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.similarity import (
     quantize_expr,
 )
@@ -98,7 +99,7 @@ def power_iteration(
     # mapInPandas lineage would re-run ~2^rounds times — truncate it
     # (the x58 lesson; lazy localCheckpoint, materialized on first
     # use).
-    gram = gram.localCheckpoint(eager=False)
+    gram = materialize(gram, eager=False)
     v = gram.select(F.col("i").alias("j")).distinct().withColumn(
         "v", F.lit(1).cast("long")
     )
@@ -114,7 +115,7 @@ def power_iteration(
             # truncate the d-row vector each round or the unrolled
             # plan re-runs prior rounds ~2^rounds times (cheap here,
             # but the rounds parameter invites the blowup).
-            w = w.localCheckpoint(eager=False)
+            w = materialize(w, eager=False)
             v = _rescale(w).select(F.col("i").alias("j"), "v")
     mx = w.agg(F.max(F.abs(F.col("v"))).alias("__m"))
     return (

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def scaled_pinball_loss(
     spark: SparkSession,
@@ -75,7 +77,7 @@ def scaled_pinball_loss(
     # bounded, so one lazy localCheckpoint (the x58/x130 lesson) caps
     # the cost at a single scan; the split scalar's collect is what
     # materializes it.
-    series = series.localCheckpoint(eager=False)
+    series = materialize(series, eager=False)
     # Global split period: a bounded 1-row aggregate. Collecting it
     # (the A3 convergence-scalar shape) embeds the cut as a literal —
     # no broadcast exchange, no nested-loop join in the main plan.

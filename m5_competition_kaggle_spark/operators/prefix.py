@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def _ranged_local_sums(
     df: DataFrame, value_col: str, order_cols: tuple[str, ...]
@@ -58,8 +60,8 @@ def global_running_sums(
     per column would repeat all four per column (r14: x157's Heaps
     scan chained three — 3 range exchanges + 3 checkpoints + 3
     collects collapsed to 1 each). Same bigint/unique-order contract
-    and eager-localCheckpoint policy as ``global_running_sum`` (see
-    its docstring and the checkpoint rationale below); identical
+    and frozen materialization as ``global_running_sum`` (see the
+    checkpoint rationale there); identical
     per-column results (property-tested in tests/test_prefix_ops.py).
     """
     if not value_cols or len(value_cols) != len(out_cols):
@@ -79,7 +81,7 @@ def global_running_sums(
     # Frozen materialization — same rationale as global_running_sum's
     # checkpoint site below (sampled range boundaries must not move
     # between the totals pass and the offset join).
-    ranged = ranged.localCheckpoint(eager=True)
+    ranged = materialize(ranged)
     totals = (
         ranged.groupBy("__pid")
         .agg(*[
@@ -113,7 +115,6 @@ def global_running_sum(
     value_col: str,
     order_cols: tuple[str, ...],
     out_col: str = "running_sum",
-    eager: bool = True,
 ) -> DataFrame:
     """Global cumulative sum of ``value_col`` in ``order_cols`` order,
     without a single-partition exchange. ``order_cols`` must be a unique
@@ -127,17 +128,7 @@ def global_running_sum(
     the explicit bigint contract rather than silently adopting the
     input type's overflow behavior.
 
-    .. note:: Calling this function launches a Spark job IMMEDIATELY
-       (eager ``localCheckpoint`` of an intermediate relation) even if
-       the returned DataFrame is never acted on — it is not a lazy
-       plan builder. Checkpointing also truncates lineage: if an
-       executor holding a checkpoint block is lost (e.g. under
-       dynamic allocation / decommissioning), the job FAILS and must
-       be resubmitted rather than recomputing the block from lineage.
-       Deterministic batch retries make this acceptable here; see the
-       inline comment at the checkpoint site for why eager beats both
-       ``persist`` (CacheManager entry leak on long-lived sessions)
-       and lazy checkpoint (accumulator-cleanup race noise).
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
     ranged = _ranged_local_sums(df, value_col, order_cols)
     # The __pid -> offset mapping is only valid against the EXACT
@@ -145,24 +136,12 @@ def global_running_sum(
     # samples its boundaries per-plan (the sample seed derives from the
     # physical RDD), so the totals pass and the final join MUST read one
     # frozen materialization — recomputing `ranged` per action could
-    # shift rows across boundaries and add the wrong offsets. The r10
-    # version froze it with .persist() and never unpersisted: the
-    # CacheManager entry (keyed by plan, invisible to GC) accumulated
-    # per call — unbounded executor-memory creep on a long-lived
-    # session (r10 VERDICT defect 1). localCheckpoint materializes the
-    # same one-time computation into ContextCleaner-managed blocks that
-    # are dropped when the DataFrame becomes unreachable, and leaves no
-    # CacheManager entry. Tradeoff: lineage is truncated, so a lost
-    # block fails the job instead of recomputing — acceptable for a
-    # deterministic batch operator whose jobs simply retry.
-    # ``eager=False`` (r15, the x29 action-collapse): the checkpoint RDD
-    # is created NOW either way (the plan — and hence the range
-    # boundaries' sampling target — is frozen at this line); non-eager
-    # merely lets the totals collect below be the job that computes and
-    # caches every partition, saving one serialized action. All
-    # partitions ARE materialized by that collect (it aggregates the
-    # full table), so the offset join still reads frozen blocks.
-    ranged = ranged.localCheckpoint(eager=eager)
+    # shift rows across boundaries and add the wrong offsets. Lazy: the
+    # checkpoint RDD is created NOW (the plan — and hence the range
+    # boundaries' sampling target — is frozen at this line), and the
+    # totals collect below aggregates every partition, so it is the
+    # one job that fills the frozen blocks the offset join reads.
+    ranged = materialize(ranged, eager=False)
 
     totals = (
         ranged.groupBy("__pid")
@@ -188,7 +167,6 @@ def pack_into_shards(
     size_col: str,
     order_cols: tuple[str, ...],
     shard_budget: int,
-    eager: bool = True,
 ) -> DataFrame:
     """Sequence packing: assign rows (chunks) to fixed-token-budget
     shards by walking them in a deterministic global order —
@@ -197,7 +175,7 @@ def pack_into_shards(
     to the shard in which its START offset falls, so a shard may overrun
     the budget by at most one item — a deterministic rule any engine
     reproduces; trimming/padding the boundary item is downstream's call."""
-    out = global_running_sum(df, size_col, order_cols, "__cum", eager=eager)
+    out = global_running_sum(df, size_col, order_cols, "__cum")
     return out.withColumn(
         "shard_id",
         F.expr(f"(__cum - {size_col}) div {shard_budget}").cast("long"),

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def global_running_max(
     df: DataFrame,
@@ -42,13 +44,7 @@ def global_running_max(
     unique key (ties would make "the" global order ambiguous — same
     contract as global_running_sum).
 
-    .. note:: Calling this function launches a Spark job IMMEDIATELY
-       (eager ``localCheckpoint`` of an intermediate relation) even if
-       the returned DataFrame is never acted on, and the checkpoint
-       truncates lineage (a lost executor block fails the job instead
-       of recomputing — acceptable for deterministic batch retries).
-       Same policy and rationale as ``global_running_sum``; see the
-       checkpoint comment there.
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
     n = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
@@ -63,7 +59,7 @@ def global_running_max(
     # the __pid -> carry mapping is only valid against the exact
     # partition assignment it was computed on (repartitionByRange
     # samples boundaries per-plan).
-    ranged = ranged.localCheckpoint(eager=True)
+    ranged = materialize(ranged)
 
     tops = (
         ranged.groupBy("__pid")

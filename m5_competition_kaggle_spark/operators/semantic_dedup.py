@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.vector_kernel import (
     int_dot,
     nearest_centroids,
@@ -82,28 +83,14 @@ def semantic_dedup(
     (the member this row deduplicates to), or the vector's own id when
     kept. Downstream: ``filter(keep == 1)`` is the deduplicated corpus.
 
-    .. note:: Calling this function launches a Spark job IMMEDIATELY
-       (eager ``localCheckpoint`` of an intermediate relation) even if
-       the returned DataFrame is never acted on — it is not a lazy
-       plan builder. Checkpointing also truncates lineage: if an
-       executor holding a checkpoint block is lost (e.g. under
-       dynamic allocation / decommissioning), the job FAILS and must
-       be resubmitted rather than recomputing the block from lineage.
-       Deterministic batch retries make this acceptable here; see the
-       inline comment at the checkpoint site for why eager beats both
-       ``persist`` (CacheManager entry leak on long-lived sessions)
-       and lazy checkpoint (accumulator-cleanup race noise).
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
     # Both sides of the intra-cluster join and the final overlay consume
     # the assignment — materialize it so the centroid fan-out + rank runs
-    # once, not three times (measured ~1.5x at sf0.1). localCheckpoint,
-    # not persist (r12, prefix.py r11 rework): an unpersisted cache
-    # entry leaks on a long-lived session; checkpoint blocks are
-    # ContextCleaner-managed. Lineage truncation (lost block => job
-    # retry) is the documented tradeoff.
-    assigned = assign_clusters(
-        vectors, n_centroids, id_col, vec_col
-    ).localCheckpoint(eager=True)
+    # once, not three times (measured ~1.5x at sf0.1).
+    assigned = materialize(
+        assign_clusters(vectors, n_centroids, id_col, vec_col)
+    )
     return _canonical_keep(assigned, threshold_dot, id_col)
 
 

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
+
 
 def _ceil_mul(n, p: int, q: int):
     """ceil(p*n/q) for integer column n — exact in any engine."""
@@ -93,12 +95,7 @@ def jaccard_prefix_join(
     # consumer (guide §5 caching-when-reused; x98's pairs/splits
     # convention — this is the operator's working set, reused by
     # construction).
-    #
-    # .. note:: ``localCheckpoint`` stores to executor local storage —
-    #    cheaper than a reliable checkpoint but lost with an executor;
-    #    acceptable here because the operator re-derives it from the
-    #    source on failure.
-    tok = tok.localCheckpoint(eager=True)
+    tok = materialize(tok)
     # Global rarest-first order: (df ASC, token ASC). Ties broken by the
     # token string so the order is total and engine-independent.
     tdf = tok.groupBy("token").agg(F.count(F.lit(1)).alias("tok_df"))
@@ -205,20 +202,18 @@ def source_jaccard_matrix(
     # the pair explode AND the size flank; the eager localCheckpoint
     # shingles the corpus ONCE instead of once per consumer (measured:
     # without it no ReuseExchange fires and the scan+join+collect_set
-    # pipeline replays per consumer). Same executor-local caveat as
-    # ``jaccard_prefix_join``'s element table.
-    grp = grp.localCheckpoint(eager=True)
+    # pipeline replays per consumer).
+    grp = materialize(grp)
     # sizes is bounded by the group count (tiny); checkpointing it
     # stops the two broadcast flanks (na, nb) from re-running the
     # explode+aggregate over the checkpointed shingle table twice.
     # coalesce(1): one row per group, one checkpoint block (r15
     # checkpoint-site audit).
-    sizes = (
+    sizes = materialize(
         grp.select(F.explode("__gs").alias(group_col))
         .groupBy(group_col)
         .agg(F.count(F.lit(1)).alias("n"))
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     inter = (
         grp.select(

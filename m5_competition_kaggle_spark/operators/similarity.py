@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.vector_kernel import (
     int_dot,
     nearest_centroids,
@@ -244,11 +245,11 @@ def lsh_topk(
     the L-way fan-out is 24-byte keys, never the 64-element vector.
     Table collisions of a pair land in one partition (all L rows of a
     neighbor come from one input row), so the pair-dedup aggregate
-    eliminates them map-side before the exchange. Vectors are attached
-    once per unique pair afterwards via plain keyed joins, and the dot is
-    computed exactly once per pair. (Carrying vectors through the fan-out
-    inflates it ~20× and recomputes the dot per collision; measured 1.8×
-    slower at sf0.1.)
+    eliminates them map-side before the exchange. Vectors, quantized once
+    each, are attached per unique pair afterwards via plain keyed joins,
+    and the dot is computed exactly once per pair. (Carrying vectors
+    through the fan-out inflates it ~20× and recomputes the dot per
+    collision; measured 1.8× slower at sf0.1.)
 
     The query side deliberately carries NO broadcast hint: the certified
     query set scales with the corpus (2% of it), so a forced broadcast
@@ -267,14 +268,13 @@ def lsh_topk(
     attach); results are identical because the bucket function is
     deterministic per (id, vector). The shared bucket table is eagerly
     checkpointed — (id, table, bucket) int64 triples, corpus·L rows —
-    so both consumers read one materialization (the between-queries
-    release valve frees the blocks at the next query entry).
+    so both consumers read one materialization.
     """
     if query_pred is not None:
-        bk = _bucketize_arrow(
+        bk = materialize(_bucketize_arrow(
             vectors, "neighbor_id", id_col, vec_col, num_planes,
             num_tables, dim,
-        ).localCheckpoint(eager=True)
+        ))
         cand = bk
         q = bk.filter(query_pred(F.col("neighbor_id"))).select(
             F.col("neighbor_id").alias("query_id"), "table", "bucket"
@@ -294,18 +294,14 @@ def lsh_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.count(F.lit(1)).alias("__n_tables"))
     )
-    # raw vectors: quantized_dot rounds internally (feeding it
-    # pre-quantized arrays would square the 1e3 scale)
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__q_vec")
-    )
-    nv = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v_vec")
-    )
+    # each vector is quantized once, before the attach joins, not once
+    # per candidate pair it appears in
+    qv = quantized(queries, id_col, vec_col, ("query_id", "__q_vec"))
+    nv = quantized(vectors, id_col, vec_col, ("neighbor_id", "__v_vec"))
     matched = (
         pairs.join(qv, "query_id")
         .join(nv, "neighbor_id")
-        .withColumn("dot", quantized_dot("__q_vec", "__v_vec"))
+        .withColumn("dot", int_dot("__q_vec", "__v_vec"))
     )
     return top_n(
         matched, "query_id", "dot", "neighbor_id", "dot", k, "rank"

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.adida import adida_forecast
 from m5_competition_kaggle_spark.operators.croston import (
     croston_forecast,
@@ -70,7 +71,7 @@ def routed_forecast_eval(
     # 2.97/3.99, LAZY 3.15/3.29, lazy+coalesce(1) 4.44/3.75, no
     # checkpoint 4.51/4.31 — lazy is the only variant ≤3.3 s at BOTH
     # core counts.
-    demand = demand.localCheckpoint(eager=False)
+    demand = materialize(demand, eager=False)
     cut = demand.agg(
         (F.max(F.col(t_col)) - F.lit(h)).alias("__cutoff")
     )

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.sources.catalog import load_table
 
 # --------------------------------------------------------------- x162
@@ -531,16 +532,14 @@ def x166_bm25_rerank_eval(
     emb = load_table(spark, sf_dir, "embeddings")
     # The BM25 shortlist (<= n_terms*k = 100 rows) feeds FIVE subtrees
     # (anchor, rerank dots, both RBO/nDCG flanks, the term spine); an
-    # eager localCheckpoint runs the corpus-wide BM25 pipeline ONCE
+    # eager checkpoint runs the corpus-wide BM25 pipeline ONCE
     # instead of once per consumer (guide §5 caching-when-reused; the
     # x154 demand-table convention). Bounded rows — driver-safe.
     # coalesce(1): constant-bounded table, one checkpoint block instead
     # of one per shuffle partition (r15 checkpoint-site audit).
-    short = bm25_topk(
+    short = materialize(bm25_topk(
         docs, "doc_id", "text", n_terms=5, min_token_len=4, k=20
-    ).select("term", "doc_id", "rank").coalesce(1).localCheckpoint(
-        eager=True
-    )
+    ).select("term", "doc_id", "rank").coalesce(1))
     qe = emb.select(
         F.col("vec_id").alias("doc_id"),
         quantize_expr("embedding").alias("v"),
@@ -567,14 +566,13 @@ def x166_bm25_rerank_eval(
     # rr (<= 10 rows/term) feeds both the RBO flank and the nDCG flank;
     # checkpointing it runs the shortlist x embeddings rerank once.
     # coalesce(1): constant-bounded (r15 checkpoint-site audit).
-    rr = (
+    rr = materialize(
         dots.withColumn(
             "rank", F.row_number().over(w_rr).cast("long")
         )
         .filter(F.col("rank") <= 10)
         .select("term", "doc_id", "rank")
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     bm10 = short.filter(F.col("rank") <= 10)
     rbo = rbo_prefix(bm10, rr, "term", "doc_id", "rank")

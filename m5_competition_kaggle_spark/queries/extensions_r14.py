@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.cvm import cvm_statistic
 from m5_competition_kaggle_spark.operators.gini import gini_by_group
 from m5_competition_kaggle_spark.operators.markov import (
@@ -653,15 +654,13 @@ def x198_dim_truncation_recall(
     # O(|Q|·|N|) block-matmul pass (measured: 12 parquet scans / 18
     # windows in the composed plan). Guide §5 caching-when-reused;
     # x166's bounded-shortlist convention.
-    full_top = (
+    full_top = materialize(
         brute_force_topk(emb, queries, k=10)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
     )
-    trunc_top = (
+    trunc_top = materialize(
         brute_force_topk(half, half_q, k=10)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
     )
     matched = (
         full_top.join(
@@ -670,7 +669,7 @@ def x198_dim_truncation_recall(
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
     )
-    per_q = (
+    per_q = materialize(
         full_top.groupBy("query_id")
         .agg(F.count(F.lit(1)).cast("long").alias("k_full"))
         .join(matched, "query_id", "left")
@@ -683,7 +682,6 @@ def x198_dim_truncation_recall(
                 "coalesce(n_matched, 0) * 1000 DIV k_full"
             ).alias("recall_permille"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = F.broadcast(
         per_q.agg(
@@ -791,14 +789,13 @@ def x199_dedup_config_stability(
     docs = load_table(spark, sf_dir, "documents")
     # one LSH+verify pass at the LOOSER threshold; the tighter config
     # is a filter on the exact jaccard already computed per pair.
-    # localCheckpoint: both CC runs (and their iterations) re-read the
+    # Materialized: both CC runs (and their iterations) re-read the
     # verified pair set; pairs are LSH-bounded, far smaller than the
-    # corpus. Eager, matching the dedup-family convention (see
-    # minhash_lsh_pairs' docstring note on the tradeoff).
-    pairs = minhash_lsh_pairs(
+    # corpus.
+    pairs = materialize(minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=16, bands=4,
         shingle_size=3, threshold=0.7,
-    ).select("id_a", "id_b", "jaccard").localCheckpoint(eager=True)
+    ).select("id_a", "id_b", "jaccard"))
     ca = dedup_clusters(
         pairs.filter(F.col("jaccard") >= 0.8).select("id_a", "id_b")
     ).select("doc_id", F.col("cluster_id").alias("ca"))
@@ -816,10 +813,10 @@ def x199_dedup_config_stability(
     )
     # r14: cont feeds three reductions (pairs_both, pairs_a, pairs_b);
     # without a cut each re-runs the docs∪ca∪cb join. Bounded by the
-    # cluster count — eager localCheckpoint per the family convention.
-    cont = assign.groupBy("ca", "cb").agg(
+    # cluster count.
+    cont = materialize(assign.groupBy("ca", "cb").agg(
         F.count(F.lit(1)).alias("nij")
-    ).localCheckpoint(eager=True)
+    ))
     both = cont.agg(
         F.sum(F.expr("nij * (nij - 1) DIV 2"))
         .cast("long")

@@ -466,7 +466,7 @@ def x200_concurrency_profile(
     close_level column carries across the gap by construction.
 
     .. note:: calls ``global_running_sum``, which launches a Spark
-       job at call time (eager localCheckpoint) — not a lazy plan.
+       job at call time (its totals collect) — not a lazy plan.
 
     Reference parity: reference pipeline.py has no interval/sweep
     analytics; engine extension family (SURVEY §2 extensions), the

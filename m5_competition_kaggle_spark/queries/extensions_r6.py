@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.dedup import doc_shingles
 from m5_competition_kaggle_spark.operators.graph_metrics import kcore_peel
 from m5_competition_kaggle_spark.operators.retrieval import bm25_topk
@@ -541,7 +542,7 @@ def x69_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", F.explode(tokens("text")).alias("t"))
         .filter(F.col("t") != "")
     )
-    dt = tf.distinct().localCheckpoint(eager=True)
+    dt = materialize(tf.distinct())
     hashed = dt.select("source", h64(F.col("t")).alias("h")).select(
         "source",
         F.pmod("h", F.lit(HLL_M)).alias("bucket"),
@@ -560,7 +561,7 @@ def x69_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Dense 64-register array per source; sources with no tokens keep
     # an all-zero array (the old grid/left-join/coalesce semantics).
-    dense = (
+    dense = materialize(
         docs.select("source").distinct()
         .join(
             regs.groupBy("source").agg(
@@ -577,7 +578,6 @@ def x69_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" b -> coalesce(try_element_at(mm, cast(b as bigint)), 0L))"
             ).alias("r"),
         )
-        .localCheckpoint(eager=True)
     )
 
     used_expr = "size(filter({c}, x -> x > 0L))"

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.anomaly import (
     rolling_zscore_flags,
 )
@@ -91,15 +92,13 @@ def x86_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # The BM25 ranking (<= 100 rows) feeds both the term spine (the
     # broadcast build pruning the TF scorer) and the fuse union; the
-    # eager localCheckpoint runs the corpus-wide BM25 pipeline once
+    # eager checkpoint runs the corpus-wide BM25 pipeline once
     # (guide §5 caching-when-reused; x154/x166 convention). coalesce(1):
     # the table is constant-bounded (n_terms*k), so one block instead
     # of one per shuffle partition (r15 checkpoint-site audit).
-    bm = bm25_topk(
+    bm = materialize(bm25_topk(
         docs, "doc_id", "text", n_terms=5, min_token_len=4, k=20
-    ).select("term", "doc_id", "rank").coalesce(1).localCheckpoint(
-        eager=True
-    )
+    ).select("term", "doc_id", "rank").coalesce(1))
     tok = docs.select(
         "doc_id",
         F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token"),

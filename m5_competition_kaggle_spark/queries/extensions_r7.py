@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.bloom_join import (
     bloom_bits,
     bloom_semi_filter,
@@ -273,13 +274,13 @@ def x94_dedup_eval(
     # (guide §5; the x199 pairs convention). Both are pair tables,
     # far smaller than the corpus; partitioning kept (pair counts
     # scale with the corpus).
-    lsh = minhash_lsh_pairs(
+    lsh = materialize(minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=16, bands=4,
         shingle_size=3, threshold=0.8,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
-    exact = ngram_jaccard_pairs(
+    ).select("id_a", "id_b"))
+    exact = materialize(ngram_jaccard_pairs(
         docs, "doc_id", "text", shingle_size=3, threshold=0.8
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    ).select("id_a", "id_b"))
     tp = lsh.join(exact, ["id_a", "id_b"], "leftsemi")
     n_lsh = lsh.agg(F.count(F.lit(1)).alias("n_lsh"))
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))

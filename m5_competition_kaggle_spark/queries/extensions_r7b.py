@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.functions.text import h64
 from m5_competition_kaggle_spark.operators.similarity import (
     brute_force_topk,
@@ -122,13 +123,13 @@ def x98_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # r14: the verified-pair table feeds BOTH the cluster loop and the
-    # straddle audit — materialize it once (eager localCheckpoint, the
-    # x29 reuse pattern) instead of re-running the whole shingle →
+    # straddle audit — materialize it once (the x29 reuse pattern)
+    # instead of re-running the whole shingle →
     # minhash → band self-join pipeline for the leak join.
-    pairs = minhash_lsh_pairs(
+    pairs = materialize(minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=16, bands=4,
         shingle_size=3, threshold=0.8,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    ).select("id_a", "id_b"))
     clusters = dedup_clusters(pairs).select("doc_id", "cluster_id")
     assigned = docs.select("doc_id").join(clusters, "doc_id", "left")
     assigned = assigned.withColumn(
@@ -143,11 +144,11 @@ def x98_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One row per doc, 3 consumers (sizes + both pair flanks) — cheap
     # to recompute but cheaper still to cut here: without it each flank
     # re-runs the docs∪clusters join and double bucket hash.
-    splits = assigned.select(
+    splits = materialize(assigned.select(
         "doc_id",
         bucket(F.col("cid")).alias("cb"),
         bucket(F.col("doc_id")).alias("nb"),
-    ).localCheckpoint(eager=True)
+    ))
     sized = splits.agg(
         F.sum(F.when(F.col("cb") < 80, 1).otherwise(0)).alias("n_train"),
         F.sum(
@@ -252,7 +253,7 @@ def x100_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("e.m", "e.v")
     counts = melt.groupBy("m", "v").agg(F.count(F.lit(1)).alias("__c"))
     # ONE two-phase prefix scan over all three distributions; the cum
-    # table hangs off an eager localCheckpoint, so the branches below
+    # table hangs off a checkpoint, so the branches below
     # re-read the materialization, not the events pipeline.
     cum = global_running_sum(counts, "__c", ("m", "v"), "__cum")
     maxes = cum.groupBy("m").agg(F.max("__cum").alias("__hi"))

@@ -21,6 +21,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from m5_competition_kaggle_spark.blocks import materialize
 from m5_competition_kaggle_spark.operators.curation import (
     chunk_documents,
     contamination_hits,
@@ -237,12 +238,8 @@ def x29_corpus_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-decontamination corpus is ALSO materialized: both the
     minhash branch and the final chunking branch consume it, and
     without it the whole decon shingle join re-executes per consumer
-    (measured ~2s at sf0.1). Both reuse points are
-    localCheckpoint(eager=True), not .persist(): a persisted plan is
-    a CacheManager entry nothing ever frees (the r10 prefix.py leak
-    class — one leaked dataset per invocation on a long-lived
-    session), while checkpoint blocks drop when the result goes
-    unreachable (ARCHITECTURE.md "Caching policy")."""
+    (measured ~2s at sf0.1). Both reuse points go through
+    ``blocks.materialize``."""
     from m5_competition_kaggle_spark.functions.text import (
         quality_features,
         tokens,
@@ -250,36 +247,35 @@ def x29_corpus_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from m5_competition_kaggle_spark.operators.prefix import pack_into_shards
 
     docs = load_table(spark, sf_dir, "documents")
-    # One persisted (doc_id, __toks) projection feeds every later stage —
-    # decon shingles, minhash shingles, and chunking. Repartition BEFORE
-    # tokenize+persist: the cache lands already spread, so no consumer
+    # One materialized (doc_id, __toks) projection feeds every later
+    # stage — decon shingles, minhash shingles, and chunking. Repartition
+    # BEFORE tokenizing: the fill lands already spread, so no consumer
     # needs to re-shuffle the (wide) token arrays.
     sc = spark.sparkContext
     # r15 (VERDICT item 5 — collapse x29's serialized actions): surv is
     # LAZY — its blocks materialize inside the corpus fill job below
     # (corpus consumes surv via both the filter and the hits flank), so
     # the two materializations ride ONE action instead of two.
-    surv = (
+    surv = materialize(
         quality_features(docs, "text")
         .filter(F.col("quality_score") >= 0.55)
         .select("doc_id", "text")
         .repartition(sc.defaultParallelism, "doc_id")
-        .select("doc_id", tokens("text").alias("__toks"))
-        .localCheckpoint(eager=False)
+        .select("doc_id", tokens("text").alias("__toks")),
+        eager=False,
     )
     bench_pred = (F.col("doc_id") % 97) == 0
     hits = contamination_hits(
         surv, "doc_id", None, bench_pred, DECON_SHINGLE,
         tokens_col="__toks",
     ).select("doc_id")
-    corpus = (
+    corpus = materialize(
         surv.filter(~bench_pred)
         .join(hits, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
     )
-    # eager_checkpoint=False / eager=False (r15, VERDICT item 5): the
-    # shingle blocks materialize inside the CC loop's first convergence
-    # collect, and the prefix scan's frozen blocks inside its own totals
+    # eager_checkpoint=False (r15, VERDICT item 5): the shingle blocks
+    # materialize inside the CC loop's first convergence collect, and
+    # the prefix scan's (always lazy) frozen blocks inside its own totals
     # collect — x29's serialized driver actions drop from 7 to 4
     # (corpus fill · fused CC init+round-1 collect · prefix totals
     # collect · the sink), identical blocks and results.
@@ -300,7 +296,6 @@ def x29_corpus_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "chunk_idx", "n_chunk_tokens")
     return pack_into_shards(
         chunks, "n_chunk_tokens", ("doc_id", "chunk_idx"), 4096,
-        eager=False,
     ).orderBy("doc_id", "chunk_idx")
 
 

@@ -1,8 +1,10 @@
 """Per-query profiler for the optimization rounds (guide §1).
 
-For each named query: capture ``explain("formatted")`` to a file and
-time the noop-sink execution (best of N reps, cache cleared between
-reps — the bench methodology), optionally recording per-job wall
+For each named query: with ``--plans-dir``, run it once and write the
+physical plan that executed (the final adaptive plan, via
+``plan_audit.final_plan``) to a file; then time the noop-sink
+execution (best of N reps, cache cleared between reps — the bench
+methodology), optionally recording per-job wall
 times via the status tracker so multi-job plans (localCheckpoint,
 broadcast builds, convergence loops) are attributable.
 
@@ -28,13 +30,14 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--plans-dir", default=None, help="write explain('formatted') here")
+    ap.add_argument("--plans-dir", default=None, help="write the executed plan here")
     ap.add_argument("--tag", default=None, help="suffix for plan files, e.g. before/after")
     ap.add_argument("--all-top", type=int, default=0, help="profile the N slowest from BENCH.local.json")
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
     from m5_competition_kaggle_spark.session import get_spark
+    from plan_audit import final_plan
 
     qs = entry_mod.queries()
     names = list(args.names)
@@ -58,8 +61,7 @@ def main() -> int:
         fn = qs[name]
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
-            df = fn(spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            plan = final_plan(fn(spark, args.sf_dir))
             suffix = f"_{args.tag}" if args.tag else ""
             with open(os.path.join(args.plans_dir, f"{name}{suffix}.txt"), "w") as f:
                 f.write(plan)

@@ -78,10 +78,11 @@ def global_running_sums(
     )
     for i, vc in enumerate(value_cols):
         ranged = ranged.withColumn(f"__local_{i}", F.sum(vc).over(w))
-    # Frozen materialization — same rationale as global_running_sum's
-    # checkpoint site below (sampled range boundaries must not move
-    # between the totals pass and the offset join).
-    ranged = materialize(ranged)
+    # Frozen, lazy materialization — same rationale as
+    # global_running_sum's checkpoint site below (sampled range
+    # boundaries must not move between the totals pass and the offset
+    # join; the totals collect is the one job that fills the blocks).
+    ranged = materialize(ranged, eager=False)
     totals = (
         ranged.groupBy("__pid")
         .agg(*[

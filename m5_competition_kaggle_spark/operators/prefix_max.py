@@ -55,11 +55,12 @@ def global_running_max(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     ranged = ranged.withColumn("__local", F.max(value_col).over(w))
-    # Frozen materialization for the same reason as global_running_sum:
-    # the __pid -> carry mapping is only valid against the exact
-    # partition assignment it was computed on (repartitionByRange
-    # samples boundaries per-plan).
-    ranged = materialize(ranged)
+    # Frozen, lazy materialization for the same reason as
+    # prefix.global_running_sum's checkpoint site: the __pid -> carry
+    # mapping is only valid against the exact partition assignment it
+    # was computed on (repartitionByRange samples boundaries per-plan),
+    # and the maxima collect below is the one job that fills the blocks.
+    ranged = materialize(ranged, eager=False)
 
     tops = (
         ranged.groupBy("__pid")

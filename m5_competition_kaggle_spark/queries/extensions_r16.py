@@ -627,7 +627,8 @@ def x206_watermark_audit(
     out-of-order test.
 
     .. note:: calls ``global_running_max``, which launches a Spark
-       job at call time (eager localCheckpoint) — not a lazy plan.
+       job at call time (its partition-maxima collect) — not a lazy
+       plan.
     """
     from m5_competition_kaggle_spark.operators.prefix_max import (
         global_running_max,

@@ -9,7 +9,11 @@ bench, driver contract) runs with the same, cluster-ready configuration:
   UTC-naive);
 - shuffle partitions sized to the local core count rather than the 200
   default (on a real cluster this is overridden via ``extra_conf`` or
-  spark-submit; AQE coalescing makes the exact number forgiving).
+  spark-submit; AQE coalescing makes the exact number forgiving);
+- a generated-code cache large enough for the engine's working set, so
+  a pipeline or query mix that runs again reuses its compiled classes
+  instead of recompiling them all on every pass (Spark's 100-entry
+  default is smaller than one pass).
 """
 
 from __future__ import annotations
@@ -42,6 +46,17 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Spark's LRU cache of generated classes holds 100 entries by
+        # default; one pass needs more, so with the default every pass
+        # recompiles every class. Distinct entries per pass, measured on 4 cores:
+        # ~150 for the vector/graph query mix, ~413 for an M5 pipeline
+        # pass over 250 days, 253 of them the melt (its Expand has >100
+        # input columns, so it runs outside whole-stage codegen with one
+        # class per day column). At the full 1,941-day width the melt
+        # needs 1,944 and the pass ~2,100; 4096 is the next power of
+        # two. A static conf, read once per JVM when CodeGenerator first
+        # loads: extra_conf on a running JVM cannot change it.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # InferFiltersFromGenerate duplicates the generator's input
         # expression into a pre-exchange Filter: for explode(<computed
         # array>) the whole tokenize/shingle expression then runs in the

@@ -6,7 +6,11 @@ physical plan that executed (the final adaptive plan, via
 execution (best of N reps, cache cleared between reps — the bench
 methodology), optionally recording per-job wall
 times via the status tracker so multi-job plans (localCheckpoint,
-broadcast builds, convergence loops) are attributable.
+broadcast builds, convergence loops) are attributable. Each rep also
+reports how many classes Janino compiled and how long that took (deltas
+of Spark's codegen counters, read outside the timed region): a rep that
+recompiles code an earlier rep generated shows its generated-code cache
+is too small.
 
 Usage:
   python scripts/profile_query.py x140_pinball x129_bootstrap_ci
@@ -52,6 +56,15 @@ def main() -> int:
 
     spark = get_spark("profile")
     sc = spark.sparkContext
+    codegen_metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    code_generator = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def compile_counters() -> tuple[int, int]:
+        """(Janino compiles, compile nanoseconds) so far in this JVM."""
+        return (
+            codegen_metrics.METRIC_COMPILATION_TIME().getCount(),
+            code_generator.compileTime(),
+        )
 
     # warm-up
     qs["q1_filter_project"](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
@@ -66,18 +79,26 @@ def main() -> int:
             with open(os.path.join(args.plans_dir, f"{name}{suffix}.txt"), "w") as f:
                 f.write(plan)
         best = float("inf")
-        per_rep = []
+        per_rep, compiles, compile_ms = [], [], []
         for _ in range(args.reps):
             spark.catalog.clearCache()
             sc.setJobDescription(name)
+            n0, ns0 = compile_counters()
             t0 = time.time()
             fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
+            n1, ns1 = compile_counters()
             per_rep.append(round(dt, 3))
+            compiles.append(n1 - n0)
+            compile_ms.append(round((ns1 - ns0) / 1e6))
             best = min(best, dt)
         sc.setJobDescription(None)
         results[name] = round(best, 3)
-        print(f"{best:7.3f}  {name}  reps={per_rep}", flush=True)
+        print(
+            f"{best:7.3f}  {name}  reps={per_rep}  compiles={compiles}  "
+            f"compile_ms={compile_ms}",
+            flush=True,
+        )
     print(json.dumps(results))
     return 0
 

@@ -13,7 +13,10 @@ reproduces). ``hashed_tf_pairs`` exposes the exact (doc, bucket, tf)
 relation the model consumes, and the x36 query hash-checks it against a
 DuckDB twin; only the L-BFGS-fitted probabilities remain rows-only (the
 split the r2 audit asked for: "Spark ML plumbing correct" certified
-separately from "optimizer converged").
+separately from "optimizer converged"). ``fixed_weight_logits`` (x44)
+and ``perceptron_step`` (x49) are the integer-exact scoring and
+training surfaces over those features, both from the one
+``fixed_weight`` vector.
 
 Scale shape: bucketing is a pure JVM column expression; the bucket→count
 sparse vector comes from a fixed-vocabulary ``CountVectorizerModel`` —
@@ -130,15 +133,21 @@ def model_keep_predicate(min_prob: float = 0.5) -> Column:
     return F.col("model_quality") >= min_prob
 
 
+def fixed_weight(bucket: Column) -> Column:
+    """The FIXED deterministic integer weight of a feature bucket,
+    w[b] = (h64(str(b)) % 2001) − 1000, embedded identically in the SQL
+    oracles of x44 and x49."""
+    return F.pmod(h64(bucket.cast("string")), F.lit(2001)) - F.lit(1000)
+
+
 def fixed_weight_logits(
     df: DataFrame, key_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """The classifier's SCORING surface, hash-certifiable (r3 verdict
     item 4): per-doc linear score over the exact ``tf_buckets`` features
-    the trained model consumes, with a FIXED deterministic weight vector
-    w[b] = (h64(str(b)) % 2001) − 1000 embedded identically in the SQL
-    oracle (x44). All int64: logit_units = Σ_token w[bucket(token)]
-    (equal to Σ_bucket tf·w), keep = logit ≥ 0.
+    the trained model consumes, with the ``fixed_weight`` vector. All
+    int64: logit_units = Σ_token w[bucket(token)] (equal to
+    Σ_bucket tf·w), keep = logit ≥ 0.
 
     Sigmoid is monotone, so the keep decision and ranking are identical
     to P(label)=sigmoid(logit/scale) thresholding — certifying the
@@ -148,15 +157,80 @@ def fixed_weight_logits(
     Pure per-row column expressions — corpus scoring stays shuffle-free."""
     b = tf_buckets(text_col)
     wsum = F.aggregate(
-        b,
-        F.lit(0).cast("long"),
-        lambda acc, x: acc
-        + F.pmod(h64(x.cast("string")), F.lit(2001))
-        - F.lit(1000),
+        b, F.lit(0).cast("long"), lambda acc, x: acc + fixed_weight(x)
     )
     return df.select(
         F.col(key_col),
         F.size(b).cast("long").alias("n_terms"),
         wsum.alias("logit_units"),
         (wsum >= 0).cast("int").alias("keep"),
+    )
+
+
+def perceptron_step(
+    df: DataFrame,
+    label: Column,
+    key_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """One integer-exact perceptron update over the hashed-TF features —
+    the TRAINING arithmetic made hash-certifiable (x49), where L-BFGS
+    over float sigmoids can't be replayed bit-for-bit by another engine.
+    From the ``fixed_weight`` vector w0:
+
+        logit_i = Σ_b tf_ib · w0[b]            (int64)
+        pred_i  = [logit_i ≥ 0]                (the x44 keep rule)
+        grad_b  = Σ_i (pred_i − y_i) · tf_ib   (int64)
+        w1[b]   = w0[b] − grad_b               (learning rate 1 in units)
+
+    This is the genuine gradient of the perceptron loss — featurize →
+    score → predict → per-feature gradient → weight update is the entire
+    fit loop except the sigmoid, whose float convergence stays bracketed
+    by pytest (tests/test_ml_quality.py).
+
+    ``label`` must be an integer-deterministic {0,1} expression over
+    ``df``'s columns (float-derived labels would reintroduce the
+    cross-engine last-ulp risk this exists to remove). Returns one row
+    per bucket observed in the corpus: (bucket, w0_units, grad_units,
+    w1_units), the full before/gradient/after weight state.
+
+    Scale shape: the (doc, bucket, tf) relation is corpus-sized but
+    every aggregation is keyed (doc_id or bucket); per-bucket partial
+    aggregation is map-side combinable and the output is bounded by
+    N_FEATURES rows regardless of corpus size.
+    """
+    tfp = hashed_tf_pairs(df, key_col, text_col)
+    logits = (
+        tfp.select(
+            key_col,
+            (F.col("tf") * fixed_weight(F.col("bucket"))).alias("__u"),
+        )
+        .groupBy(key_col)
+        .agg(F.sum("__u").alias("__logit"))
+    )
+    # Every doc contributes an error term; token-less docs have no tfp
+    # rows (logit 0 → pred 1, matching x44's empty-doc keep) and then
+    # touch no bucket, so they drop out of the gradient on both engines.
+    errs = (
+        df.select(F.col(key_col), label.cast("long").alias("__y"))
+        .join(logits, key_col, "left")
+        .select(
+            key_col,
+            (
+                (F.coalesce(F.col("__logit"), F.lit(0)) >= 0).cast("long")
+                - F.col("__y")
+            ).alias("__err"),
+        )
+    )
+    grads = (
+        tfp.join(errs, key_col)
+        .groupBy("bucket")
+        .agg(F.sum(F.col("__err") * F.col("tf")).alias("grad_units"))
+    )
+    w0 = fixed_weight(F.col("bucket"))
+    return grads.select(
+        "bucket",
+        w0.alias("w0_units"),
+        "grad_units",
+        (w0 - F.col("grad_units")).alias("w1_units"),
     )

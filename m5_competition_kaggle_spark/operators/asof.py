@@ -5,11 +5,12 @@ Attach to every left row the most recent right row with
 lookup: price as of trade time, last feature snapshot before an event).
 
 Implementation is the union + cumulative-window technique, NOT a range
-join: tag both sides, union, and take ``last(value, ignorenulls=True)``
-over (key, ts, side) with rows-unbounded-preceding — one shuffle on the
-key, linear work, no per-row range probe. This scales where an inequality
-join would explode: a range theta-join materializes O(|L|·match_width)
-candidates, the union-window is O(|L| + |R|) after one sort.
+join: tag both sides, union, and take the last packed right row
+(``last(struct, ignorenulls=True)``) over (key, ts, side) with
+rows-unbounded-preceding — one shuffle on the key, linear work, no
+per-row range probe. This scales where an inequality join would
+explode: a range theta-join materializes O(|L|·match_width) candidates,
+the union-window is O(|L| + |R|) after one sort.
 
 Tie rule: a right row at exactly left.ts IS visible (inclusive, matching
 DuckDB ``ASOF JOIN ... ON l.ts >= r.ts`` which takes the greatest
@@ -34,21 +35,31 @@ def asof_join_backward(
     value_cols: Sequence[str],
 ) -> DataFrame:
     """Left as-of-backward join. ``right`` must contain ``on + [ts_col] +
-    value_cols`` and be unique per (on, ts_col). Output: all left columns
-    + ``value_cols`` (NULL when no right row precedes)."""
+    value_cols`` and be unique per (on, ts_col); ``value_cols`` must not
+    already be left columns (validated). Output: all left columns +
+    ``value_cols``, all taken from the one nearest preceding right row
+    (NULL when no right row precedes)."""
     keys = list(on)
     vals = list(value_cols)
+    clash = set(vals) & set(left.columns)
+    if clash:
+        raise ValueError(
+            f"value columns already on the left: {sorted(clash)}"
+        )
 
+    # All matched fields ride ONE struct so they provably come from the
+    # SAME right row: a per-column last(..., ignorenulls=True) would,
+    # for a nearest right row with a NULL in one value column, take that
+    # column from an OLDER right row (DuckDB's ASOF JOIN returns NULL).
     r_side = right.select(
         *keys,
         F.col(ts_col),
-        F.lit(0).alias("__side"),
-        *[F.col(c) for c in vals],
+        F.lit(0).alias("__side"),  # right sorts BEFORE left at equal ts
+        F.struct(*[F.col(c) for c in vals]).alias("__pack"),
     )
-    l_side = left.withColumn("__side", F.lit(1))
-    for c in vals:
-        if c not in left.columns:
-            l_side = l_side.withColumn(c, F.lit(None).cast(r_side.schema[c].dataType))
+    l_side = left.withColumn("__side", F.lit(1)).withColumn(
+        "__pack", F.lit(None).cast(r_side.schema["__pack"].dataType)
+    )
     for c in left.columns:
         if c not in r_side.columns:
             r_side = r_side.withColumn(c, F.lit(None).cast(l_side.schema[c].dataType))
@@ -59,6 +70,12 @@ def asof_join_backward(
         .orderBy(F.col(ts_col), F.col("__side"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    for c in vals:
-        unioned = unioned.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return unioned.filter(F.col("__side") == 1).drop("__side")
+    filled = unioned.select(
+        *[F.col(c) for c in left.columns],
+        F.col("__side"),
+        F.last("__pack", ignorenulls=True).over(w).alias("__m"),
+    ).filter(F.col("__side") == 1)
+    return filled.select(
+        *[F.col(c) for c in left.columns],
+        *[F.col(f"__m.{c}").alias(c) for c in vals],
+    )

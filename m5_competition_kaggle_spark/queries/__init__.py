@@ -78,9 +78,8 @@ _MODULES = (
 # NO file in any of the 45 promotions' closures may be edited this round
 # (that would re-stale it out of its own re-certification); the closure
 # audit is `python -c "...dep_closure..."` — new capability this round
-# therefore lands in NEW modules only (operators/similarity_scaled.py,
-# operators/curation_scale.py, ...), with in-place consolidation batched
-# for r6 when the window has slack again.
+# therefore landed in NEW modules only; those forks have since been
+# folded back into the modules that own each algorithm.
 #
 # Everything not in the effective head lands in the tail, ordered as
 # registered. Stale/never-certified tail queries are auto-promoted into

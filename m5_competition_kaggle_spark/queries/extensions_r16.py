@@ -33,9 +33,9 @@ with the same Spark-vs-DuckDB differential as
 - x206 watermark audit (added r13 second session): the measurement
   behind the withWatermark delay — replay in arrival order, lateness
   = event-time high-water mark minus own event time, exact
-  p50/p95/p99/max in minutes. The running max goes through the NEW
-  two-phase max scan (operators/prefix_max.py, the sum scan's
-  monoid sibling); honest fixture finding: the generator emits in
+  p50/p95/p99/max in minutes. The running max goes through the
+  two-phase max scan (operators/prefix.py, the sum scan over the max
+  monoid); honest fixture finding: the generator emits in
   timestamp order, so the corpus reads exactly 0 everywhere.
 - x211 weekly spectrum (added r14): single-bin DFT (Goertzel) power
   at period 7 of each type's daily unit series via a shared
@@ -609,8 +609,8 @@ def x206_watermark_audit(
     the measured arrival process.
 
     Scale shape: the running max goes through the two-phase
-    range-partitioned scan (``operators/prefix_max.py`` — the max
-    monoid sibling of the x29 sum scan, never a single-partition
+    range-partitioned scan (``operators/prefix.py::global_running_max``
+    — the x29 sum scan over the max monoid, never a single-partition
     window over the corpus); lateness reduces to minute cells
     (calendar-bounded: a 31-day span has ≤ 44,641 distinct values —
     the x124/x187 allowance class for the cumulative window), then
@@ -630,7 +630,7 @@ def x206_watermark_audit(
        job at call time (its partition-maxima collect) — not a lazy
        plan.
     """
-    from m5_competition_kaggle_spark.operators.prefix_max import (
+    from m5_competition_kaggle_spark.operators.prefix import (
         global_running_max,
     )
 

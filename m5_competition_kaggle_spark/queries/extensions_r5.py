@@ -3,12 +3,12 @@
 Scale-mode variants of certified operators plus the round's new
 surface, all hash-certified against DuckDB twins:
 
-- x47 ``lsh_topk_auto`` — occupancy-scaled plane count (the fix for
-  the r4 audit's one super-linear entry, x10 at fixed planes); the
-  integer-exact sizing rule lets the oracle derive the same count
-  from ``count(*)``.
-- x48 ``bloom_decontaminate(exact_audit=False)`` — Bloom probing by
-  shingle h64 only, no exact string join (the r4-verdict flag; x46
+- x47 ``lsh_topk(num_planes=None)`` — occupancy-scaled plane count
+  (the fix for the r4 audit's one super-linear entry, x10 at fixed
+  planes); the integer-exact sizing rule lets the oracle derive the
+  same count from ``count(*)``.
+- x48 ``bloom_contamination_stats(exact_audit=False)`` — Bloom probing
+  by shingle h64 only, no exact string join (the r4-verdict flag; x46
   keeps the audited variant).
 - x49 ``perceptron_step`` — one integer-exact training iteration of
   the quality classifier (shrinks x28's rows-only residue to L-BFGS
@@ -42,11 +42,6 @@ surface, all hash-certified against DuckDB twins:
   bounded-state streaming agg.
 - s10 windowed streaming CMS — one bounded sketch per event-time
   hour, watermarked; time-sliced frequency profiles.
-
-New module on purpose: r5's certification window is fully booked by the
-45 stale re-certifications, so no file in their hash closures may
-change (see queries/__init__.py). x47 takes the window's one spare
-slot; the rest auto-queue for the r6 window.
 """
 
 from __future__ import annotations
@@ -54,44 +49,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.operators.curation import BLOOM_K, BLOOM_M
-from m5_competition_kaggle_spark.operators.curation_scale import (
-    bloom_decontaminate,
+from m5_competition_kaggle_spark.operators.curation import (
+    BLOOM_K,
+    BLOOM_M,
+    bloom_contamination_stats,
 )
-from m5_competition_kaggle_spark.operators.similarity import hyperplanes
-from m5_competition_kaggle_spark.operators.similarity_scaled import (
+from m5_competition_kaggle_spark.operators.similarity import (
     MAX_PLANES,
-    lsh_topk_auto,
+    TARGET_OCCUPANCY,
+    hyperplanes,
+    lsh_topk,
 )
 from m5_competition_kaggle_spark.queries.extensions import (
     H64,
     _minhash_verified_ctes,
     _shingle_cte,
 )
+from m5_competition_kaggle_spark.queries.llm_curation import DECON_SHINGLE
 from m5_competition_kaggle_spark.sources.catalog import load_table
-
-TARGET_OCCUPANCY = 32  # expected vectors per LSH bucket in auto mode
-# 4-token shingles, matching x20/x46 (llm_curation.DECON_SHINGLE —
-# duplicated as a literal so this module's hash closure stays off
-# llm_curation.py, which the r6 consolidation will edit).
-BLOOM_SHINGLE = 4
 
 
 def x47_sim_topk_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k with the occupancy-scaled plane count: num_planes is
     derived from the corpus row count (integer-exact rule in
-    ``similarity_scaled.auto_num_planes``), holding expected bucket
+    ``similarity.auto_num_planes``), holding expected bucket
     occupancy — and so per-query candidate work — constant as the
     corpus grows. Same query set and ranking as x10; only the sizing
     rule differs, and the oracle recomputes it from ``count(*)``."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    out = lsh_topk_auto(
+    out = lsh_topk(
         emb,
         queries,
         k=10,
         num_planes=None,
-        target_occupancy=TARGET_OCCUPANCY,
         num_tables=8,
         dim=64,
     )
@@ -105,20 +96,20 @@ def x48_bloom_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every exchange carries fixed-width ints. x46 stays the audited
     twin that also certifies the false-positive accounting."""
     docs = load_table(spark, sf_dir, "documents")
-    return bloom_decontaminate(
-        docs, "doc_id", "text", (F.col("doc_id") % 97) == 0, BLOOM_SHINGLE,
+    return bloom_contamination_stats(
+        docs, "doc_id", "text", (F.col("doc_id") % 97) == 0, DECON_SHINGLE,
         exact_audit=False,
     ).orderBy("doc_id")
 
 
 def x49_fit_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One integer-exact perceptron training iteration of the quality
-    classifier (``ml/quality_step.perceptron_step``): from the x44
+    classifier (``ml/quality.perceptron_step``): from the x44
     fixed weight vector, compute per-doc predictions, the per-bucket
     gradient against an integer weak label (n_chars ≥ 200), and the
     updated weights — all int64, reproduced bit-for-bit by the oracle.
     Shrinks x28's rows-only residue to just L-BFGS float convergence."""
-    from m5_competition_kaggle_spark.ml.quality_step import perceptron_step
+    from m5_competition_kaggle_spark.ml.quality import perceptron_step
 
     docs = load_table(spark, sf_dir, "documents")
     label = (F.col("n_chars") >= 200).cast("int")
@@ -133,7 +124,7 @@ def _lsh_topk_auto_oracle(
     dim: int,
     q_mod: int,
 ) -> str:
-    """Twin of ``lsh_topk_auto``: derives the plane count from count(*)
+    """Twin of ``lsh_topk(num_planes=None)``: derives the plane count from count(*)
     with the same integer arithmetic (ceil-div then smallest p with
     2^p ≥ m, scanned over integer shifts — no float log2 on either
     engine), then replays x10's bucket/join/rank plan with every plane
@@ -195,7 +186,7 @@ _BLOOM_FAST_ORACLE = rf"""
 WITH docs AS (SELECT doc_id,
                      str_split_regex(trim(text), '\s+') AS toks
               FROM documents),
-{_shingle_cte(BLOOM_SHINGLE)},
+{_shingle_cte(DECON_SHINGLE)},
 bench AS (SELECT DISTINCT {H64.format(s='shingle')} AS h
           FROM sh WHERE doc_id % 97 = 0),
 corp AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 97 <> 0),
@@ -295,7 +286,7 @@ FROM est ORDER BY token
 """
 
 
-# Twin of ml/quality_step.perceptron_step over the x36 feature relation
+# Twin of ml/quality.perceptron_step over the x36 feature relation
 # and the x44 weight rule; sums CAST to BIGINT (DuckDB sum → HUGEINT).
 _FIT_STEP_ORACLE = rf"""
 WITH tok AS (SELECT doc_id,
@@ -426,8 +417,7 @@ def x57_semantic_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return semantic_dedup_lsh(
-        emb, 350_000, num_planes=None,
-        target_occupancy=TARGET_OCCUPANCY, dim=64,
+        emb, 350_000, num_planes=None, dim=64,
     ).orderBy("vec_id")
 
 

@@ -1,10 +1,5 @@
-"""Round-6-window extension queries (registered late in round 5).
-
-New surface, hash-certified against DuckDB twins locally; the r5 driver
-window is booked by the 45 stale re-certifications, so these queue
-behind the head and driver-certify in the r6+ windows (the same path
-x48–x62 took). New modules only — nothing here touches any banked
-query's hash closure.
+"""Round-6 extension queries (registered late in round 5), each
+hash-certified against a DuckDB twin.
 
 - x63 ``bm25_topk`` — lexical ranked retrieval (the query->documents
   scorer next to the embedding ANN stack); query workload derived
@@ -30,7 +25,7 @@ query's hash closure.
 - x70 CMS heavy hitters — sketch-filter-then-verify, certified
   no-false-negative.
 - s12 streaming interval join — live points vs static windows with
-  zero join state (``streaming/interval.py``).
+  zero join state (``operators/interval.py``'s pre-expanded probe).
 - x71 entity-resolution composition — fuzzy pairs -> components ->
   canonical election, certified as one pipeline.
 - x72 product-quantization ANN with exact rerank — the compression
@@ -834,16 +829,16 @@ ORACLES["x70_heavy_hitters"] = _heavy_hitters_oracle(4, 1024, HH_THRESHOLD)
 
 def s12_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the STREAMING interval join
-    (``streaming/interval.py``): the bucket expansion that turns the
-    range predicate into an equi-join is stateless on the point side,
-    so live events match static incident windows as they arrive with
-    zero join state; the per-incident count is then one ordinary
-    streaming aggregate. Stream == batch proven bit-for-bit in
+    (``operators/interval.py::streaming_interval_join``): the bucket
+    expansion that turns the range predicate into an equi-join is
+    stateless on the point side, so live events match static incident
+    windows as they arrive with zero join state; the per-incident count
+    is then one ordinary streaming aggregate. Stream == batch proven bit-for-bit in
     tests/test_streaming_interval.py; this twin (same plan over the
     batch frame) certifies the match set + aggregate against the
     DuckDB range join. Same windows as x67; output keeps per-incident
     event counts only (the streaming aggregate's natural shape)."""
-    from m5_competition_kaggle_spark.streaming.interval import (
+    from m5_competition_kaggle_spark.operators.interval import (
         expanded_intervals,
         streaming_interval_join,
     )

@@ -1,10 +1,6 @@
-"""Round-7 queue — built and locally certified during round 6; the r6
-head-50 is fully booked (50 never-certified entries), so these register
-at the tail and auto-promote into the r7 driver window.
-
-New modules only (operators/interval_keyed.py, bloom_join.py,
-ngram_lm.py, streaming/anomaly_state.py) plus import-only composition
-of certified operators.
+"""Round-7 queries: the keyed interval join (``operators/interval.py``
+with ``on=``), ``bloom_join.py``, ``ngram_lm.py`` and
+``streaming/anomaly_state.py``, plus compositions of existing operators.
 
 - s14 pandas-kernel anomaly flags: the SAME trailing-window integer
   z-test as x85, computed by an ``applyInPandas`` grouped-map whose
@@ -38,9 +34,7 @@ from m5_competition_kaggle_spark.operators.bloom_join import (
     bloom_bits,
     bloom_semi_filter,
 )
-from m5_competition_kaggle_spark.operators.interval_keyed import (
-    interval_join_keyed,
-)
+from m5_competition_kaggle_spark.operators.interval import interval_join
 from m5_competition_kaggle_spark.operators.ngram_lm import (
     kneser_ney_components,
 )
@@ -203,7 +197,7 @@ def x93_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution: every view within the day before
     a purchase shares the credit equally (micro-units, 10^6 DIV n).
     The purchase-window × view match runs through the KEYED interval
-    join (``operators/interval_keyed.py``) — co-partitioned by
+    join (``operators/interval.py``, ``on=``) — co-partitioned by
     (user, time-bucket), no per-user nested loop."""
     ev = load_table(spark, sf_dir, "events")
     views = (
@@ -217,9 +211,9 @@ def x93_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts_nanos") - F.lit(DAY_NANOS)).alias("w_start"),
         (F.col("ts_nanos") + F.lit(1)).alias("w_end"),
     )
-    j = interval_join_keyed(
-        views, purch, on=["user_id"], point_ts="vtsn",
-        start_col="w_start", end_col="w_end", bucket_width=DAY_NANOS,
+    j = interval_join(
+        views, purch, point_ts="vtsn", start_col="w_start",
+        end_col="w_end", bucket_width=DAY_NANOS, on=["user_id"],
     )
     w = Window.partitionBy("p_event_id")
     credited = j.withColumn(

@@ -118,8 +118,8 @@ ALLOWED_SINGLE_PARTITION = {
         " span has <= 44,641 minute values at any corpus size; the"
         " x124/x187 class); the corpus-sized running max runs through"
         " the two-phase range-partitioned scan"
-        " (operators/prefix_max.py), plan-asserted single-partition-"
-        "free by tests/test_prefix_max.py"
+        " (operators/prefix.py::global_running_max), plan-asserted"
+        " single-partition-free by its running-max tests"
     ),
     "x220_emd_drift": (
         "the corpus-grid cum/lead window walks the distinct"

@@ -1,5 +1,6 @@
-"""Production Bloom decontamination (operators/curation_scale.py) —
-the ``exact_audit=False`` flag from the r4 verdict (What's wrong #4).
+"""Production Bloom decontamination
+(``operators/curation.py::bloom_contamination_stats``) — the
+``exact_audit=False`` flag from the r4 verdict (What's wrong #4).
 
 Contract: identical (key, n_shingles, bloom_hits) to the audited
 operator, but the plan must never join or exchange on a shingle STRING
@@ -10,9 +11,6 @@ from pyspark.sql import functions as F
 
 from m5_competition_kaggle_spark.operators.curation import (
     bloom_contamination_stats,
-)
-from m5_competition_kaggle_spark.operators.curation_scale import (
-    bloom_decontaminate,
 )
 from m5_competition_kaggle_spark.sources.catalog import load_table
 
@@ -29,7 +27,7 @@ def _plan(df) -> str:
 
 def test_fast_path_matches_audited_counts(spark):
     docs = load_table(spark, SF, "documents")
-    fast = bloom_decontaminate(
+    fast = bloom_contamination_stats(
         docs, "doc_id", "text", BENCH(), 4, exact_audit=False
     )
     audited = bloom_contamination_stats(docs, "doc_id", "text", BENCH(), 4)
@@ -43,7 +41,7 @@ def test_fast_path_matches_audited_counts(spark):
 
 def test_exact_audit_true_delegates(spark):
     docs = load_table(spark, SF, "documents")
-    out = bloom_decontaminate(
+    out = bloom_contamination_stats(
         docs, "doc_id", "text", BENCH(), 4, exact_audit=True
     )
     assert set(out.columns) == {
@@ -55,7 +53,9 @@ def test_exact_audit_true_delegates(spark):
 def test_fast_plan_has_no_shingle_string_join(spark):
     docs = load_table(spark, SF, "documents")
     fast_plan = _plan(
-        bloom_decontaminate(docs, "doc_id", "text", BENCH(), 4)
+        bloom_contamination_stats(
+            docs, "doc_id", "text", BENCH(), 4, exact_audit=False
+        )
     )
     # positive control: the audited plan DOES join on the string
     audit_plan = _plan(
@@ -78,8 +78,8 @@ def test_fast_plan_has_no_shingle_string_join(spark):
 def test_fast_path_empty_benchmark(spark):
     """No benchmark docs → zero bits → every doc has bloom_hits 0."""
     docs = load_table(spark, SF, "documents")
-    out = bloom_decontaminate(
-        docs, "doc_id", "text", F.lit(False), 4
+    out = bloom_contamination_stats(
+        docs, "doc_id", "text", F.lit(False), 4, exact_audit=False
     )
     rows = out.collect()
     assert len(rows) > 0
@@ -88,5 +88,7 @@ def test_fast_path_empty_benchmark(spark):
 
 def test_fast_path_empty_corpus(spark):
     docs = load_table(spark, SF, "documents")
-    out = bloom_decontaminate(docs, "doc_id", "text", F.lit(True), 4)
+    out = bloom_contamination_stats(
+        docs, "doc_id", "text", F.lit(True), 4, exact_audit=False
+    )
     assert out.count() == 0

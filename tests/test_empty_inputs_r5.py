@@ -4,7 +4,7 @@ never a throw)."""
 
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.ml.quality_step import perceptron_step
+from m5_competition_kaggle_spark.ml.quality import perceptron_step
 from m5_competition_kaggle_spark.operators.cms import (
     cms_build,
     cms_estimate,
@@ -18,9 +18,7 @@ from m5_competition_kaggle_spark.operators.semantic_dedup import (
     semantic_dedup,
 )
 from m5_competition_kaggle_spark.operators.shuffle import seeded_shuffle
-from m5_competition_kaggle_spark.operators.similarity_scaled import (
-    lsh_topk_auto,
-)
+from m5_competition_kaggle_spark.operators.similarity import lsh_topk
 
 
 def _empty_docs(spark):
@@ -56,7 +54,7 @@ def test_semantic_dedup_on_empty(spark):
 
 
 def test_lsh_auto_on_empty(spark):
-    out = lsh_topk_auto(
+    out = lsh_topk(
         _empty_vecs(spark), _empty_vecs(spark), k=5, num_planes=None
     )
     assert out.count() == 0  # auto planes clamps to 1 at n=0

@@ -1,4 +1,4 @@
-"""Brute-force property tests for operators/prefix_max.py — the
+"""Brute-force property tests for operators/prefix.py's running max — the
 running-MAX two-phase scan (the max-monoid sibling of test_prefix.py's
 sum scan): result must equal a literal sorted walk for random frames,
 including negative values, duplicates of the max, and frames smaller
@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import random
 
-from m5_competition_kaggle_spark.operators.prefix_max import (
+from m5_competition_kaggle_spark.operators.prefix import (
     global_running_max,
 )
 

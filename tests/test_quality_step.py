@@ -1,11 +1,13 @@
-"""Integer-exact perceptron step (ml/quality_step.py) — the certified
+"""Integer-exact perceptron step (ml/quality.py) — the certified
 training-arithmetic twin of x28's fit.
 """
 
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.ml.quality import fixed_weight_logits
-from m5_competition_kaggle_spark.ml.quality_step import perceptron_step
+from m5_competition_kaggle_spark.ml.quality import (
+    fixed_weight_logits,
+    perceptron_step,
+)
 from m5_competition_kaggle_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"

@@ -15,8 +15,8 @@ run on every pytest invocation):
 
 x200/x206 compose eager-localCheckpoint scans whose corpus-sized
 phase is lineage-truncated out of the visible plan; their scan shape
-is asserted at the operator level (tests/test_prefix.py,
-tests/test_prefix_max.py) and their visible plans still must pass
+is asserted at the operator level (the running-sum and running-max
+tests of operators/prefix.py) and their visible plans still must pass
 the generic asserts (the bounded calendar window is the documented
 plan-audit allowance)."""
 

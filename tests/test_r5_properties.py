@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 from m5_competition_kaggle_spark.operators.semantic_dedup import (
     auto_n_centroids,
 )
-from m5_competition_kaggle_spark.operators.similarity_scaled import (
+from m5_competition_kaggle_spark.operators.similarity import (
     MAX_PLANES,
     auto_num_planes,
 )

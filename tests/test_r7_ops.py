@@ -1,4 +1,4 @@
-"""Unit + stream==batch tests for the round-7 queue (interval_keyed,
+"""Unit + stream==batch tests for the round-7 queue (keyed interval_join,
 bloom_join, ngram_lm, anomaly_state)."""
 
 import os
@@ -11,9 +11,7 @@ from m5_competition_kaggle_spark.operators.bloom_join import (
     bloom_bits,
     bloom_semi_filter,
 )
-from m5_competition_kaggle_spark.operators.interval_keyed import (
-    interval_join_keyed,
-)
+from m5_competition_kaggle_spark.operators.interval import interval_join
 from m5_competition_kaggle_spark.operators.ngram_lm import (
     kneser_ney_components,
 )
@@ -37,7 +35,7 @@ def test_interval_join_keyed_matches_filter_join(spark):
     )
     got = {
         (r.pid, r.iid)
-        for r in interval_join_keyed(
+        for r in interval_join(
             points, intervals, on=["k"], point_ts="t",
             start_col="s", end_col="e", bucket_width=7,
         ).collect()
@@ -50,7 +48,7 @@ def test_interval_join_keyed_no_cross_key_match(spark):
     intervals = spark.createDataFrame(
         [(2, 0, 10, "other-key")], "k long, s long, e long, iid string"
     )
-    assert interval_join_keyed(
+    assert interval_join(
         points, intervals, on=["k"], point_ts="t", start_col="s",
         end_col="e", bucket_width=4,
     ).count() == 0

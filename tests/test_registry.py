@@ -1,10 +1,15 @@
 """The query registry's contract: ``all_queries()`` is the effective
 head followed by the rest in ``_MODULES`` registration order, every
-oracle belongs to a registered query, and the registry and catalog
-guards are hard raises that survive ``python -O``."""
+oracle belongs to a registered query, the registry and catalog guards
+are hard raises that survive ``python -O``, and every package-internal
+import resolves."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib
+import importlib.util
 import os
 import subprocess
 import sys
@@ -97,3 +102,53 @@ def test_check_oracle_rejects_unknown_names():
     )
     assert proc.returncode != 0
     assert "unknown query names: x_typo" in proc.stderr
+
+
+def _package_import_targets():
+    """(file:line, module, name-or-None) for every import of a package
+    module anywhere in the package — function-body imports included,
+    since a lazy import only fails when its query runs."""
+    pkg = "m5_competition_kaggle_spark"
+    for path in sorted(glob.glob(
+        os.path.join(REPO, pkg, "**", "*.py"), recursive=True
+    )):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                targets = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                # the package uses absolute imports only; a relative one
+                # would slip past the module-name filter below
+                assert not node.level, f"{path}:{node.lineno}: relative"
+                targets = [(node.module, a.name) for a in node.names]
+            else:
+                continue
+            where = f"{os.path.relpath(path, REPO)}:{node.lineno}"
+            for mod, name in targets:
+                if mod == pkg or mod.startswith(pkg + "."):
+                    yield where, mod, name
+
+
+def _resolves(mod: str, name: str | None) -> bool:
+    try:
+        if importlib.util.find_spec(mod) is None:
+            return False
+    except ModuleNotFoundError:
+        return False
+    if name is None or name == "*":
+        return True
+    if hasattr(importlib.import_module(mod), name):
+        return True
+    return importlib.util.find_spec(f"{mod}.{name}") is not None
+
+
+def test_package_imports_resolve():
+    targets = list(_package_import_targets())
+    assert len(targets) > 100  # the walk found the package
+    dangling = [
+        f"{where}: {mod}" + (f".{name}" if name else "")
+        for where, mod, name in targets
+        if not _resolves(mod, name)
+    ]
+    assert not dangling, "dangling imports:\n" + "\n".join(dangling)

@@ -1,4 +1,4 @@
-"""Occupancy-scaled LSH (operators/similarity_scaled.py) — the fix for
+"""Occupancy-scaled LSH (``lsh_topk(num_planes=None)``) — the fix for
 the r4 audit's one super-linear entry (x10 at fixed planes).
 
 The scale contract is tested STRUCTURALLY on candidate counts, not wall
@@ -11,11 +11,10 @@ candidates in a constant occupancy band (ratio well under the verdict's
 import pytest
 from pyspark.sql import functions as F
 
-from m5_competition_kaggle_spark.operators.similarity import lsh_topk
-from m5_competition_kaggle_spark.operators.similarity_scaled import (
+from m5_competition_kaggle_spark.operators.similarity import (
     MAX_PLANES,
     auto_num_planes,
-    lsh_topk_auto,
+    lsh_topk,
 )
 
 DIM = 64
@@ -71,7 +70,7 @@ def _synth(spark, n: int):
 def test_lsh_topk_auto_equals_explicit_planes(spark):
     vecs = _synth(spark, 400)
     qs = vecs.filter(F.col("vec_id") % 50 == 0)
-    auto = lsh_topk_auto(vecs, qs, k=5, num_planes=None)
+    auto = lsh_topk(vecs, qs, k=5, num_planes=None)
     # 400 rows, occ 32 → m=13 → planes 4
     explicit = lsh_topk(vecs, qs, k=5, num_planes=4, num_tables=8, dim=DIM)
     assert sorted(map(tuple, auto.collect())) == sorted(
@@ -85,7 +84,7 @@ def _n_candidates(spark, n: int, num_planes) -> int:
     vecs = _synth(spark, n)
     qs = vecs.filter(F.col("vec_id") < 20)
     if num_planes is None:
-        out = lsh_topk_auto(vecs, qs, k=1 << 30, num_planes=None)
+        out = lsh_topk(vecs, qs, k=1 << 30, num_planes=None)
     else:
         out = lsh_topk(
             vecs, qs, k=1 << 30, num_planes=num_planes, num_tables=8,

@@ -1,4 +1,4 @@
-"""Streaming interval join (streaming/interval.py): live points
+"""Streaming interval join (operators/interval.py): live points
 joined to static windows must equal the batch twin bit-for-bit, with
 ZERO join state (stateless bucket probe; only the final count is a
 streaming aggregate)."""
@@ -10,7 +10,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from m5_competition_kaggle_spark.sources.catalog import load_table
-from m5_competition_kaggle_spark.streaming.interval import (
+from m5_competition_kaggle_spark.operators.interval import (
     expanded_intervals,
     streaming_interval_join,
 )
